@@ -1,7 +1,8 @@
 package graft
 
-import graft.ops.Relational
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, sum => fsum}
+import scala.collection.mutable
 
 /** Benchmark main — warm SparkSession, 2 full-suite warm-up passes, then
   * 5 timed passes; session startup excluded. Prints ONE JSON line;
@@ -14,60 +15,96 @@ import org.apache.spark.sql.SparkSession
   * timed pass measures query execution, not parquet decode. That matches
   * the oracle baseline, which re-reads OS-page-cached parquet through
   * DuckDB's own buffer layer.
+  *
+  * The pass loop ([[passes]]) and the dispatch-floor probe ([[floor]])
+  * are shared with [[graft.tools.BenchAmp]] and [[graft.tools.QTime]].
+  * Per-query planning, dispatch, deserialize, CPU and GC splits are
+  * perfbench's traced `olap` workload (`spark.plan_ms`, `ops.<q>_ms`,
+  * `spark.*`; perfbench/METRICS.md).
   */
 object Bench {
 
-  /** The bench session, shared with [[graft.tools.Profile]] so the
-    * profiler measures the SAME engine config the bench runs — a
-    * profile under different knobs steers tuning at the wrong term.
-    * Env knobs: SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUF (600 k-row shuffles
-    * don't amortize 32 tasks' dispatch — 8 measured ~25% faster at
-    * sf0.1, see tools/Tune), SPARK_GRAFT_CACHE_BATCH /
-    * SPARK_GRAFT_CACHE_COMPRESSED (cache scan knobs),
-    * SPARK_GRAFT_MAXPART, and SPARK_GRAFT_CONF ("k=v;k=v" passthrough).
-    */
-  def session(): SparkSession = {
-    // r06 sweep on the refreshed corpus (suite totals, same session):
-    // local[4] 4.25s, local[8] 4.23s, local[16] 4.28s, local[32] 4.12s —
-    // all within VM noise; 32 was never worse across five comparisons
-    // and matches the target execution environment, so it is the default
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUF", "8")
-    val cacheBatch = sys.env.getOrElse("SPARK_GRAFT_CACHE_BATCH", "65536")
-    val cacheComp = sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESSED", "false")
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAXPART", "4194304")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.inMemoryColumnarStorage.batchSize", cacheBatch)
-      .config("spark.sql.inMemoryColumnarStorage.compressed", cacheComp)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Micro-bench latency config (SURVEY.md §6): AQE's per-stage
-      // re-planning costs more than it saves at sub-second scale.
-      .config("spark.sql.adaptive.enabled", "false")
-      // single-node 128 GiB: broadcasting a 10-30 MB side within the JVM
-      // beats a shuffle; on a real cluster stats/AQE make this call
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not k=v (expected 'k=v;k=v')")
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+  /** The bench session ([[ScaleConfig.bench]]), shared with perfbench so
+    * the benchmark measures the SAME engine config this main runs. */
+  def session(): SparkSession = ScaleConfig.session(ScaleConfig.bench)
 
   /** The 20 BASELINE.md headline queries (q32+ additions are not in the
     * baseline suite; including them would skew the comparison). */
   def headlineNames: Seq[String] =
     graft.ops.Relational.allNames
       .filter(_.drop(1).takeWhile(_.isDigit).toInt <= 20)
+
+  /** `warm` untimed passes, then `timed` timed passes, of the registry
+    * queries `names` over the tables in `dir`. Returns one map per
+    * timed pass: query → (seconds, result rows).
+    *
+    * Per-query fault isolation: one broken query costs one red cell,
+    * never the whole run (round 5: a single AnalysisException aborted
+    * the process before any JSON was printed). A query that throws is
+    * recorded in `errors` (first message kept); one that failed before
+    * the timed passes is left out of them, one that fails during them
+    * keeps whatever timings it has. */
+  def passes(spark: SparkSession, dir: String, names: Seq[String], warm: Int,
+      timed: Int, errors: mutable.Map[String, String]): Seq[Map[String, (Double, Long)]] = {
+    def pass(ns: Seq[String]): Map[String, (Double, Long)] =
+      ns.flatMap { name =>
+        val t0 = System.nanoTime()
+        try {
+          val rows = SparkEntry.queries(name)(spark, dir).collect().length.toLong
+          Some(name -> ((System.nanoTime() - t0) / 1e9, rows))
+        } catch { case e: Throwable =>
+          errors.getOrElseUpdate(name, e.toString.take(300)); None
+        }
+      }.toMap
+    (1 to warm).foreach(_ => pass(names)) // JIT + codegen + cache population
+    val live = names.filterNot(errors.contains)
+    Seq.fill(timed)(pass(live))
+  }
+
+  /** The session's fixed per-job cost and whether its probe size was
+    * defaulted (see [[floor]]). */
+  final case class Floor(seconds: Double, rowsDefaulted: Boolean)
+
+  /** Per-session dispatch FLOOR (measured anatomy in BENCH_NOTES.md):
+    * local-mode Spark pays a fixed per-job cost — plan→RDD, codegen
+    * lookup, 2-stage scheduling, result fetch — that DuckDB's in-process
+    * executor doesn't. The probe is a `range(N).sum()` rebuilt fresh
+    * each rep, with N = the ACTUAL `lineitem` row count in `dir` (so the
+    * premise scales with the corpus): the same two-stage aggregate shape
+    * as the suite queries with ~1 ms of real compute — the JVM sums
+    * 600 k longs in ~0.2 ms, so the median IS the fixed job cost.
+    * Uniform across queries, amortizes to zero at the 100 TB design
+    * point. Run inside each session, a host-drift move is attributable
+    * in-artifact: over-floor totals separate "the VM got slower at
+    * dispatching jobs" from "a query's compute regressed".
+    *
+    * NonFatal only: a fatal error (OOM) must crash the run, not
+    * masquerade as a default floor. A failed `lineitem` count defaults N
+    * to 6 000 000, logged and flagged, because a defaulted N makes
+    * floors incomparable across runs. */
+  def floor(spark: SparkSession, dir: String): Floor = {
+    val (factRows, defaulted) =
+      try (Tables.load(spark, dir, "lineitem").count(), false)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(
+          s"[floor] lineitem count failed (${e.getMessage}); defaulting " +
+            "factRows=6000000 — floors are NOT comparable across runs")
+        (6000000L, true)
+      }
+    Floor(probeMedian(() =>
+      { spark.range(0, factRows, 1, 3).agg(fsum(col("id"))).collect(); () }), defaulted)
+  }
+
+  /** Median of 11 timed runs of `probe` after 2 that warm its codegen. */
+  private def probeMedian(probe: () => Unit): Double = {
+    probe(); probe()
+    val ts = Seq.fill(11) {
+      val t0 = System.nanoTime()
+      probe()
+      (System.nanoTime() - t0) / 1e9
+    }
+    ts.sorted.apply(ts.size / 2)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -82,29 +119,11 @@ object Bench {
       }
     }
 
-    // Per-query fault isolation: one broken query must cost one red cell,
-    // never the whole bench (round 5: a single AnalysisException aborted
-    // the process before any JSON was printed). Failed queries are dropped
-    // from the timing stats and reported under "errors".
-    val allNames = headlineNames
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def runPass(names: Seq[String]): Map[String, Double] =
-      names.flatMap { name =>
-        val t0 = System.nanoTime()
-        try {
-          SparkEntry.queries(name)(spark, sfDir).collect()
-          Some(name -> (System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          errors.getOrElseUpdate(name, e.toString.take(300)); None
-        }
-      }.toMap
-
-    runPass(allNames); runPass(allNames) // warm-up: JIT + codegen + cache population
-    val names = allNames.filterNot(errors.contains)
-    val passes = Seq.fill(5)(runPass(names))
-    // A query can also fail mid-timed-passes; keep whatever timings exist.
+    val errors = mutable.LinkedHashMap.empty[String, String]
+    val timedPasses = passes(spark, sfDir, headlineNames, warm = 2, timed = 5, errors)
+    val names = headlineNames.filterNot(errors.contains)
     def stat(f: Seq[Double] => Double) = names
-      .map { n => n -> passes.flatMap(_.get(n)) }
+      .map { n => n -> timedPasses.flatMap(_.get(n)).map(_._1) }
       .collect { case (n, ts) if ts.nonEmpty => n -> f(ts) }
     val medians = stat(ts => ts.sorted.apply(ts.size / 2))
     val mins = stat(_.min)
@@ -112,35 +131,13 @@ object Bench {
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = medians.map(_._2).sum
 
-    // Per-query dispatch FLOOR (measured anatomy in BENCH_NOTES.md):
-    // local-mode Spark pays a fixed per-job cost — plan→RDD, codegen
-    // lookup, 2-stage scheduling, result fetch — that DuckDB's
-    // in-process executor doesn't. The probe is a `range(N).sum()`
-    // rebuilt fresh each rep, with N = the ACTUAL fact-table row count
-    // at this sf (so the premise scales with SPARK_GRAFT_SF_DIR): the
-    // same two-stage aggregate shape as the suite queries with ~1 ms
-    // of real compute — the JVM sums 600 k longs in ~0.2 ms, so the
-    // median IS the fixed job cost. Uniform across queries, amortizes
-    // to zero at the 100 TB design point. `value_over_floor` = suite
-    // total net of 20 floors, reported alongside the raw total so the
-    // gate comparison is explicit, not prose. The scan-only probe
-    // bounds the single-stage variant.
-    import org.apache.spark.sql.functions.{col, sum => fsum}
+    // `value_over_floor` = suite total net of 20 floors, reported
+    // alongside the raw total so the gate comparison is explicit, not
+    // prose. The scan-only probe bounds the single-stage variant.
     val region = Tables.load(spark, sfDir, "region")
-    val factRows = Tables.load(spark, sfDir, "lineitem").count() // cached
-    def probeMedian(probe: () => Unit): Double = {
-      probe(); probe() // warm the probe's own codegen
-      val ts = Seq.fill(11) {
-        val t0 = System.nanoTime()
-        probe()
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(ts.size / 2)
-    }
     val floorScan = probeMedian(() => { region.select(col("r_regionkey")).collect(); () })
-    val floor = probeMedian(() =>
-      { spark.range(0, factRows, 1, 3).agg(fsum(col("id"))).collect(); () })
-    val overFloor = math.max(0.0, total - names.size * floor)
+    val floorPerQuery = floor(spark, sfDir).seconds
+    val overFloor = math.max(0.0, total - names.size * floorPerQuery)
 
     // value/queries = per-BASELINE.md medians; *_min = noise floor on this
     // VM (run-to-run variance is ±2x — see BENCH_NOTES.md)
@@ -149,7 +146,7 @@ object Bench {
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${fmt(medians)},""" +
       s""""value_min":${mins.map(_._2).sum},"queries_min":${fmt(mins)},""" +
-      s""""floor_per_query":$floor,"floor_scan_only":$floorScan,""" +
+      s""""floor_per_query":$floorPerQuery,"floor_scan_only":$floorScan,""" +
       s""""value_over_floor":$overFloor,"errors":$errJson,"sf":"$sfDir"}""")
     spark.stop()
   }

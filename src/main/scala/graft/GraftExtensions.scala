@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions.call_function
 /** Engine extensions, injectable at session build time:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
-  * // or: .config("spark.sql.extensions", "graft.GraftExtensions")
+  * builder.withExtensions(new GraftExtensions)
+  * // or the conf "spark.sql.extensions" -> "graft.GraftExtensions"
+  * // in a ScaleConfig posture
   * }}}
   *
   * Registers the native expressions (SQL: `SELECT cosine_sim(a, b)`).

@@ -8,13 +8,13 @@ package graft
   * unmaterialized cache makes each racing consumer duplicate the full
   * upstream pass (measured in r11: seven racing ~40 s corpus aggregates
   * in q143 before the eager count). The side effect: merely BUILDING
-  * such a query executes jobs, so plan-dump tools (Plans / PlanOf /
-  * PlanSummary) silently paid full corpus aggregations per dump.
+  * such a query executes jobs, so plan-dump tools (Plans / PlanSummary)
+  * silently paid full corpus aggregations per dump.
   *
-  * Those tools set `planOnly = true`: the eager counts are skipped —
-  * building a query then runs no jobs — while every execution path
-  * (Bench, Verify, ScaleCheck, the pipeline) keeps the default `false`
-  * and the race-proof materialization.
+  * Their session (`tools.Plans.session`) sets `planOnly = true`: the
+  * eager counts are skipped — building a query then runs no jobs —
+  * while every execution path (Bench, Verify, ScaleCheck, the pipeline)
+  * keeps the default `false` and the race-proof materialization.
   */
 object PlanMode {
   @volatile var planOnly: Boolean = false

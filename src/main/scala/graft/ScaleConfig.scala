@@ -3,16 +3,24 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
-/** The 100 TB posture, as code (SURVEY.md §4.3). Two profiles:
+/** The 100 TB posture, as code (SURVEY.md §4.3), and the one place a
+  * SparkSession is built: every main calls [[session]] with one of
+  * three postures, each a plain conf map, and sets any tool-specific
+  * runtime SQL conf with `spark.conf.set` afterwards.
   *
-  *  - [[localBench]] — what the Bench/Verify mains use: AQE off (its
-  *    re-planning overhead exceeds its benefit at sub-second queries),
-  *    shuffle partitions sized to the data not the cores, generous
-  *    broadcast threshold inside one JVM.
-  *  - [[cluster]] — the settings this engine expects on a real cluster.
-  *    Applied via `SparkSession.Builder.config(...)`; they are defaults,
-  *    not magic: partition/bucket layout (see [[graft.sources.IO]]) and
-  *    operator shape (see PlanSpec ceilings) matter more.
+  *  - [[bench]] — the Bench/perfbench session: AQE off (its re-planning
+  *    overhead exceeds its benefit at sub-second queries), shuffle
+  *    partitions sized to the data not the cores, generous broadcast
+  *    threshold inside one JVM.
+  *  - [[cluster]] — the settings this engine expects on a real cluster,
+  *    at a local shuffle width. They are defaults, not magic:
+  *    partition/bucket layout (see [[graft.sources.IO]]) and operator
+  *    shape (see PlanSpec ceilings) matter more.
+  *  - [[plain]] — Spark defaults plus shuffle partitions = cores; the
+  *    correctness dump, the examples and the audits.
+  *
+  * Every posture runs at `local[cores]`, UTC, UI off; [[cores]] is
+  * `SPARK_GRAFT_CPUS`, else the JVM's available processors.
   *
   * Cluster rationale, knob by knob:
   *  - AQE ON + coalescePartitions: 100 TB scans start wide
@@ -24,19 +32,72 @@ import org.apache.spark.sql.functions.broadcast
   *    keys in the windows/sessionization family) instead of letting one
   *    reducer run for hours — salting is then only needed for
   *    aggregation skew, not join skew.
-  *  - shuffle.partitions is deliberately large (AQE shrinks, never
-  *    grows): undersized static shuffles are the classic 100 TB OOM.
+  *  - shuffle.partitions: on a cluster it is deliberately large, ~4096
+  *    (AQE shrinks, never grows: undersized static shuffles are the
+  *    classic 100 TB OOM). On a local amplified corpus AQE would
+  *    coalesce every stage anyway, so 64 keeps the scheduler overhead
+  *    honest without changing plan shapes.
   *  - broadcast threshold stays modest on clusters: a 1 GB broadcast ×
   *    1000 executors is a terabyte of redundant heap.
   */
 object ScaleConfig {
 
-  def localBench(b: SparkSession.Builder, cores: Int, shufflePartitions: Int): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  /** Local cores for every session: `SPARK_GRAFT_CPUS`, else the JVM's
+    * available processors. */
+  val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  private val common = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** Micro-bench latency posture (SURVEY.md §6, BENCH_NOTES.md). */
+  val bench: Map[String, String] = common ++ Map(
+    // 600 k-row shuffles don't amortize 32 tasks' dispatch: 8 measured
+    // ~25% faster at sf0.1
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.inMemoryColumnarStorage.batchSize" -> "65536",
+    "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
+    "spark.sql.files.maxPartitionBytes" -> "4194304",
+    // AQE's per-stage re-planning costs more than it saves at
+    // sub-second scale
+    "spark.sql.adaptive.enabled" -> "false",
+    // single node: broadcasting a 10-30 MB side within the JVM beats a
+    // shuffle; on a real cluster stats/AQE make this call
+    "spark.sql.autoBroadcastJoinThreshold" -> "33554432")
+
+  val cluster: Map[String, String] = common ++ Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256m",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "3",
+    "spark.sql.shuffle.partitions" -> "64",
+    "spark.sql.files.maxPartitionBytes" -> "128m",
+    "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+    "spark.sql.parquet.filterPushdown" -> "true",
+    // stateful streaming at scale: RocksDB keeps per-executor state
+    // off-heap/on-disk with changelog checkpoints (vs the default
+    // HDFS-backed provider's full-snapshot-in-heap); required by
+    // transformWithState, strictly better for big flatMapGroupsWith
+    // State / dedupStream state too
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  val plain: Map[String, String] = common +
+    ("spark.sql.shuffle.partitions" -> cores.toString)
+
+  /** The session for `posture` at `local[cores]`, log level ERROR. */
+  def session(posture: Map[String, String]): SparkSession = {
+    val spark = posture
+      .foldLeft(SparkSession.builder().master(s"local[$cores]")) {
+        case (b, (k, v)) => b.config(k, v)
+      }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 
   /** Broadcast hint for DATA-SCALING build sides — sides derived from
     * corpus tables (a filtered customer dim, a distinct orders key set)
@@ -66,25 +127,4 @@ object ScaleConfig {
   def broadcastDisabled(spark: SparkSession): Boolean =
     spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
       .trim.startsWith("-")
-
-  def cluster(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "3")
-      .config("spark.sql.shuffle.partitions", "4096")
-      .config("spark.sql.files.maxPartitionBytes", "128m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // stateful streaming at scale: RocksDB keeps per-executor state
-      // off-heap/on-disk with changelog checkpoints (vs the default
-      // HDFS-backed provider's full-snapshot-in-heap); required by
-      // transformWithState, strictly better for big flatMapGroupsWith
-      // State / dedupStream state too
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
 }

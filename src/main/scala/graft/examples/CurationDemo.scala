@@ -1,11 +1,10 @@
 package graft.examples
 
-import graft.Tables
+import graft.{ScaleConfig, Tables}
 import graft.core._
 import graft.ops.Analytics
 import graft.functions.UserFunctions
 import graft.sources.IO
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end example of the public API: compose a validated pipeline,
@@ -16,11 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object CurationDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.plain)
     UserFunctions.registerAll(spark)
 
     val events = Tables.load(spark, "/root/testdata/sf0.001", "events")

@@ -1,6 +1,6 @@
 package graft.examples
 
-import graft.Tables
+import graft.{ScaleConfig, Tables}
 import graft.ops.{Curation, Drift, Selection, Validate}
 import graft.text.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -247,11 +247,7 @@ object PretrainPipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.plain)
     run(spark, "/root/testdata/sf0.001").foreach { case (k, v) =>
       println(f"$k%-16s $v")
     }

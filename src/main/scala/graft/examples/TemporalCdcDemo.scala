@@ -1,6 +1,6 @@
 package graft.examples
 
-import graft.Tables
+import graft.{ScaleConfig, Tables}
 import graft.ops.Temporal
 import graft.sources.IO
 import graft.streaming.StreamingOps
@@ -77,11 +77,7 @@ object TemporalCdcDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.plain)
     run(spark, "/root/testdata/sf0.001")
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale amplifier (VERDICT r4 §next-round #2): replicates the
@@ -31,17 +31,10 @@ object Amplify {
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tolerate an int64-nanos events.ts (pre-round-5 corpus); the
-      // column is round-tripped raw either way
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.ScaleConfig.session(graft.ScaleConfig.plain)
+    // tolerate an int64-nanos events.ts (pre-round-5 corpus); the
+    // column is round-tripped raw either way
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def raw(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, SparkEntry, Tables}
+import graft.{Bench, ScaleConfig, Tables}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
@@ -38,83 +38,39 @@ object BenchAmp {
     val ampDir = if (args.nonEmpty) args(0) else "/tmp/amp10"
     val outJson = if (args.length > 1) args(1) else "/tmp/benchamp.json"
     val sessions = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val allNames = Bench.headlineNames
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
-    def oneSession(): (Map[String, Double], Double, Boolean) = {
-      val spark = graft.ScaleConfig.cluster(SparkSession.builder())
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+    def oneSession(): (Map[String, Double], Bench.Floor) = {
+      val spark = ScaleConfig.session(ScaleConfig.cluster)
       Tables.names.foreach { n =>
         try Tables.load(spark, ampDir, n).persist().count()
         catch { case e: Throwable =>
           System.err.println(s"[benchamp] load $n failed: ${e.getMessage}")
         }
       }
-      def runPass(names: Seq[String]): Map[String, Double] =
-        names.flatMap { name =>
-          val t0 = System.nanoTime()
-          try {
-            SparkEntry.queries(name)(spark, ampDir).collect()
-            Some(name -> (System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            errors.getOrElseUpdate(name, e.toString.take(300)); None
-          }
-        }.toMap
-      runPass(allNames); runPass(allNames)
-      val names = allNames.filterNot(errors.contains)
-      val passes = Seq.fill(5)(runPass(names))
-      val medians = names
-        .map { n => n -> passes.flatMap(_.get(n)) }
+      val timed = Bench.passes(spark, ampDir, allNames, warm = 2, timed = 5, errors)
+      val medians = allNames
+        .map { n => n -> timed.flatMap(_.get(n)).map(_._1) }
         .collect { case (n, ts) if ts.nonEmpty => n -> ts.sorted.apply(ts.size / 2) }
         .toMap
-      // per-SESSION dispatch-floor probe (r9 VERDICT #6): the Bench
-      // floor shape — a fresh range(factRows) two-stage aggregate, ~1 ms
-      // of real compute, so the median is the session's fixed per-job
-      // cost. Run INSIDE each session, so a host-drift session move is
-      // attributable in-artifact (over-floor totals separate "the VM got
-      // slower at dispatching jobs" from "a query's compute regressed").
-      import org.apache.spark.sql.functions.{col, sum => fsum}
-      // NonFatal only (r10 ADVICE): a fatal error (OOM) must crash the
-      // run, not silently masquerade as a default floor; and a defaulted
-      // factRows makes session floors cross-round incomparable, so the
-      // fallback is logged AND flagged in the artifact
-      var floorRowsDefaulted = false
-      val factRows =
-        try Tables.load(spark, ampDir, "lineitem").count()
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[benchamp] floor probe: lineitem count failed " +
-              s"(${e.getMessage}); defaulting factRows=6000000 — " +
-              "session floors are NOT cross-round comparable")
-          floorRowsDefaulted = true
-          6000000L
-        }
-      def probe(): Unit =
-        { spark.range(0, factRows, 1, 3).agg(fsum(col("id"))).collect(); () }
-      probe(); probe()
-      val floorTs = Seq.fill(11) {
-        val t0 = System.nanoTime(); probe(); (System.nanoTime() - t0) / 1e9
-      }
-      val floor = floorTs.sorted.apply(floorTs.size / 2)
+      // per-SESSION dispatch floor (r9 VERDICT #6), run INSIDE each
+      // session so a host-drift session move is attributable in-artifact
+      val floor = Bench.floor(spark, ampDir)
       spark.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      (medians, floor, floorRowsDefaulted)
+      (medians, floor)
     }
 
-    val sessionResults: Seq[(Map[String, Double], Double, Boolean)] =
+    val sessionResults: Seq[(Map[String, Double], Bench.Floor)] =
       (1 to sessions).map { i =>
         System.err.println(s"[benchamp] session $i/$sessions")
         oneSession()
       }
     val perSession: Seq[Map[String, Double]] = sessionResults.map(_._1)
-    val sessionFloors: Seq[Double] = sessionResults.map(_._2)
-    val floorRowsDefaulted = sessionResults.exists(_._3)
+    val sessionFloors: Seq[Double] = sessionResults.map(_._2.seconds)
+    val floorRowsDefaulted = sessionResults.exists(_._2.rowsDefaulted)
     val names = allNames.filterNot(errors.contains)
     def med(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
     val rows = names.flatMap { n =>

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Verify-style dump for the no-broadcast (100 TB-regime) join battery
   * (VERDICT r4 §next-round #1): runs the six join-heavy inventory
@@ -24,16 +23,9 @@ object NoBroadcastVerify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.ScaleConfig.session(graft.ScaleConfig.plain)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     new java.io.File(outDir).mkdirs()
 
     val planFacts = queries.map { name =>

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Compact plan-quality summary over the ENTIRE query inventory — the
   * machine-readable twin of PLANS.md: per query, the shuffle-exchange
@@ -17,16 +16,7 @@ object PlanSummary {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outJson = if (args.length > 1) args(1) else "/tmp/plan_summary.json"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    graft.PlanMode.planOnly = true // plan dumps must not execute jobs
+    val spark = Plans.session()
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val df = fn(spark, sfDir)
       val p = df.queryExecution.executedPlan.toString

@@ -1,41 +1,52 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{ScaleConfig, SparkEntry}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps the formatted physical plan of every driver query to PLANS.md —
   * the plan-quality evidence artifact (pushdown, broadcasts, codegen
-  * spans, exchange placement) at sf0.01.
+  * spans, exchange placement) at sf0.01. With query names after the
+  * corpus dir, prints only those plans to stdout instead (the per-query
+  * probe).
+  *
+  * Run: `tools/runjvm.sh graft.tools.Plans [sfDir] [q1 q2 ...]`.
   */
 object Plans {
+
+  /** The plan-dump session ([[graft.tools.PlanSummary]] shares it): the
+    * plain posture with AQE off, so the dumped plan is the final one,
+    * and plan-only mode, so building a query runs no jobs. */
+  def session(): SparkSession = {
+    val spark = ScaleConfig.session(ScaleConfig.plain)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    graft.PlanMode.planOnly = true
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.PlanMode.planOnly = true // plan dumps must not execute jobs
-    val sb = new StringBuilder
-    sb.append("# Physical plans (generated by graft.tools.Plans, sf0.01, AQE off)\n\n")
-    sb.append("Evidence artifact: `PushedFilters`/`ReadSchema` show scan-level ")
-    sb.append("pushdown and pruning; `BroadcastHashJoin` vs `SortMergeJoin` shows ")
-    sb.append("join strategy; `(n)`-numbered operators are whole-stage-codegen spans.\n")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n## $name\n\n```\n$plan```\n")
-      } catch {
-        case e: Throwable => sb.append(s"\n## $name\n\nFAILED: ${e.getMessage}\n")
+    val only = args.drop(1).toSeq
+    val spark = session()
+    def plan(name: String): String =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+    if (only.nonEmpty) only.foreach(name => println(s"== $name ==\n${plan(name)}"))
+    else {
+      val sb = new StringBuilder
+      sb.append("# Physical plans (generated by graft.tools.Plans, sf0.01, AQE off)\n\n")
+      sb.append("Evidence artifact: `PushedFilters`/`ReadSchema` show scan-level ")
+      sb.append("pushdown and pruning; `BroadcastHashJoin` vs `SortMergeJoin` shows ")
+      sb.append("join strategy; `(n)`-numbered operators are whole-stage-codegen spans.\n")
+      SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+        try sb.append(s"\n## $name\n\n```\n${plan(name)}```\n")
+        catch {
+          case e: Throwable => sb.append(s"\n## $name\n\nFAILED: ${e.getMessage}\n")
+        }
       }
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"wrote PLANS.md (${sb.length} chars)")
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${sb.length} chars)")
     spark.stop()
   }
 }

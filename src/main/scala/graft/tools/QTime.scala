@@ -1,43 +1,29 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, ScaleConfig, Tables}
 
 /** Ad-hoc single-query timer for scale-fix verification: runs the named
   * registry queries against a corpus dir under the cluster posture
   * (AQE on — [[graft.ScaleConfig.cluster]]), one warm-up pass then one
-  * timed pass each, and prints seconds + row counts.
+  * timed pass each ([[graft.Bench.passes]]), and prints the session's
+  * dispatch floor, then seconds + row counts.
   *
-  * Run: `sbt "runMain graft.tools.QTime <dir> <q1> [q2 ...]"`.
+  * Run: `tools/runjvm.sh graft.tools.QTime <dir> <q1> [q2 ...]`.
   */
 object QTime {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.ScaleConfig.cluster(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.cluster)
     Tables.names.foreach(n => Tables.load(spark, dir, n).persist().count())
     // burn-in: absorb the cache-materialization eviction/GC churn before
     // anything is timed (the ScaleCheck discipline — without it the
     // first query reads 2-10x its steady-state time at 100x)
     Tables.names.foreach(n => Tables.load(spark, dir, n).count())
-    // per-SESSION dispatch-floor probe (the Bench/BenchAmp shape), so a
+    // per-SESSION dispatch floor (the Bench/BenchAmp probe), so a
     // flagged-row re-measure carries its own drift normalizer — the
     // r9-verdict protocol for adjudicating ScaleCheck superlinear flags
-    import org.apache.spark.sql.functions.{col, sum => fsum}
-    val factRows = Tables.load(spark, dir, "lineitem").count()
-    def probe(): Unit =
-      { spark.range(0, factRows, 1, 3).agg(fsum(col("id"))).collect(); () }
-    probe(); probe()
-    val floorTs = Seq.fill(11) {
-      val t0 = System.nanoTime(); probe(); (System.nanoTime() - t0) / 1e9
-    }
-    println(f"floor_per_query ${floorTs.sorted.apply(floorTs.size / 2)}%8.3f s")
+    println(f"floor_per_query ${Bench.floor(spark, dir).seconds}%8.3f s")
     // QTIME_STAGES=1: per-stage task metrics for the TIMED pass (the
     // guide-§7 attribution view — which stage, how many tasks, executor
     // run vs wall), so a flagged query's cost lands on an operator
@@ -58,13 +44,14 @@ object QTime {
         }
       })
     }
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      if (!cold) fn(spark, dir).collect() // warm: codegen + cache
+      if (!cold) Bench.passes(spark, dir, Seq(name), warm = 1, timed = 0, errors)
       stages.clear()
-      val t0 = System.nanoTime()
-      val rows = fn(spark, dir).collect().length
-      println(f"$name%-30s ${(System.nanoTime() - t0) / 1e9}%8.2f s   rows=$rows")
+      Bench.passes(spark, dir, Seq(name), warm = 0, timed = 1, errors).head.get(name) match {
+        case Some((sec, rows)) => println(f"$name%-30s $sec%8.2f s   rows=$rows")
+        case None => println(f"$name%-30s FAILED   ${errors(name)}")
+      }
       if (dumpStages) {
         // listener-bus drain: poll until the queue stops growing for two
         // consecutive intervals (r11 ADVICE — a fixed 500 ms sleep could

@@ -4,7 +4,6 @@ import graft.Tables
 import graft.ops.Curation
 import graft.text.{Dedup, TextAnalysis}
 import graft.vector.SemanticDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Times the HEAVY curation operators (the ones whose cost is quadratic
@@ -17,13 +16,7 @@ import org.apache.spark.sql.functions._
 object ScaleRun {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.ScaleConfig.session(graft.ScaleConfig.plain)
 
     def timeIt(name: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()

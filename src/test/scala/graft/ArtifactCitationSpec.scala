@@ -18,20 +18,18 @@ class ArtifactCitationSpec extends AnyFunSuite {
     "ANNSERVE", "ANN_RECALL", "FLAGCHECK")
 
   test("every artifact citation in SURVEY.md / BENCH_NOTES.md exists") {
+    // forked tests run in the project base directory
+    val base = java.nio.file.Paths.get("").toAbsolutePath
     val pat = "\\b([A-Z][A-Z0-9_]*)_r(\\d{2})\\b".r
     val missing = Seq("SURVEY.md", "BENCH_NOTES.md").flatMap { doc =>
-      val path = java.nio.file.Paths.get("/root/repo", doc)
-      if (!java.nio.file.Files.exists(path)) Seq.empty
-      else {
-        val text = java.nio.file.Files.readString(path)
-        pat.findAllMatchIn(text).toSeq
-          .filter(m => families.contains(m.group(1)))
-          .map(m => (doc, s"${m.group(1)}_r${m.group(2)}.json"))
-          .distinct
-          .filterNot { case (_, f) =>
-            java.nio.file.Files.exists(java.nio.file.Paths.get("/root/repo", f))
-          }
-      }
+      val path = base.resolve(doc)
+      assert(java.nio.file.Files.exists(path), s"$doc not found under $base")
+      val text = java.nio.file.Files.readString(path)
+      pat.findAllMatchIn(text).toSeq
+        .filter(m => families.contains(m.group(1)))
+        .map(m => (doc, s"${m.group(1)}_r${m.group(2)}.json"))
+        .distinct
+        .filterNot { case (_, f) => java.nio.file.Files.exists(base.resolve(f)) }
     }
     assert(missing.isEmpty,
       s"artifact citations with no artifact on disk: $missing — " +
