@@ -22,6 +22,22 @@ import org.apache.spark.sql.functions.broadcast
   * Every posture runs at `local[cores]`, UTC, UI off; [[cores]] is
   * `SPARK_GRAFT_CPUS`, else the JVM's available processors.
   *
+  * Shared by every posture:
+  *  - codegen cache of [[codegenCacheEntries]] (4096) classes: Spark
+  *    keeps ONE LRU cache of compiled generated classes per JVM, 100
+  *    entries by default. One bench-20 pass needs ~270 distinct classes
+  *    and reads them in the same cycle every pass, so at 100 entries
+  *    each class was evicted before its next use and every warm pass
+  *    recompiled all of them (269 compiles, 6.3-9.6 s a pass on 4
+  *    vCPUs); at 4096, passes after the warm-up compile 0 classes and
+  *    take 3.3-4.5 s. A curate pipeline run needs ~500 classes: a
+  *    second run in the same JVM compiled 598 classes at 100 entries and
+  *    8 at 4096; 4096 leaves room for the ANN phase and the whole query
+  *    registry besides. The conf is static: the first session that compiles
+  *    code fixes the size for the whole JVM, so it is a constant of
+  *    every posture, not a knob (BENCH_NOTES.md, "The generated-code
+  *    cache, measured").
+  *
   * Cluster rationale, knob by knob:
   *  - AQE ON + coalescePartitions: 100 TB scans start wide
   *    (maxPartitionBytes controls split size → ~800 k input tasks at
@@ -47,9 +63,13 @@ object ScaleConfig {
   val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** Entries in the JVM-wide generated-code cache (see above). */
+  val codegenCacheEntries: Int = 4096
+
   private val common = Map(
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> codegenCacheEntries.toString)
 
   /** Micro-bench latency posture (SURVEY.md §6, BENCH_NOTES.md). */
   val bench: Map[String, String] = common ++ Map(

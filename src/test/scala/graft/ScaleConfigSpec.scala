@@ -16,7 +16,8 @@ class ScaleConfigSpec extends AnyFunSuite {
       "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
       "spark.sql.files.maxPartitionBytes" -> "4194304",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "4096"))
   }
 
   test("cluster posture: AQE with coalesce and skew join at 64 shuffle partitions, RocksDB state") {
@@ -32,6 +33,7 @@ class ScaleConfigSpec extends AnyFunSuite {
       "spark.sql.parquet.filterPushdown" -> "true",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
@@ -41,7 +43,8 @@ class ScaleConfigSpec extends AnyFunSuite {
     assert(ScaleConfig.plain == Map(
       "spark.sql.shuffle.partitions" -> ScaleConfig.cores.toString,
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "4096"))
   }
 
 }

@@ -3,13 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one session). */
+/** Shared local session for all suites (one JVM, one session). Its
+  * generated-code cache takes the engine mains' size
+  * ([[ScaleConfig.codegenCacheEntries]]; see [[CodegenCacheSpec]]). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", ScaleConfig.codegenCacheEntries.toString)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
