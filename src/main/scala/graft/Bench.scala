@@ -43,14 +43,15 @@ object Bench {
     * the process before any JSON was printed). A query that throws is
     * recorded in `errors` (first message kept); one that failed before
     * the timed passes is left out of them, one that fails during them
-    * keeps whatever timings it has. */
+    * keeps whatever timings it has. Each query call is one
+    * [[CacheScope]], so no call reads frames an earlier one cached. */
   def passes(spark: SparkSession, dir: String, names: Seq[String], warm: Int,
       timed: Int, errors: mutable.Map[String, String]): Seq[Map[String, (Double, Long)]] = {
     def pass(ns: Seq[String]): Map[String, (Double, Long)] =
       ns.flatMap { name =>
         val t0 = System.nanoTime()
         try {
-          val rows = SparkEntry.queries(name)(spark, dir).collect().length.toLong
+          val rows = CacheScope(SparkEntry.queries(name)(spark, dir).collect().length.toLong)
           Some(name -> ((System.nanoTime() - t0) / 1e9, rows))
         } catch { case e: Throwable =>
           errors.getOrElseUpdate(name, e.toString.take(300)); None
@@ -109,15 +110,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session()
-
-    // A table that fails to load (e.g. future corpus drift the adaptive
-    // reader doesn't cover) should break its queries, not the process.
-    Tables.names.foreach { n =>
-      try Tables.load(spark, sfDir, n).persist().count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] load $n failed: ${e.getMessage}")
-      }
-    }
+    Tables.persistAll(spark, sfDir)
 
     val errors = mutable.LinkedHashMap.empty[String, String]
     val timedPasses = passes(spark, sfDir, headlineNames, warm = 2, timed = 5, errors)

@@ -55,6 +55,16 @@ object Tables {
     }
   }
 
+  /** Persist and count every table under `sfDir`; returns the names that
+    * loaded. A table that fails to load (a missing file, corpus drift
+    * the adaptive reader doesn't cover) is logged and breaks only its
+    * queries, not the run. */
+  def persistAll(spark: SparkSession, sfDir: String): Seq[String] = names.filter { n =>
+    try { load(spark, sfDir, n).persist().count(); true }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[tables] load $n failed: ${e.getMessage}"); false }
+  }
+
   /** Register every table as a temp view (SQL entry point E2). */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))

@@ -2,7 +2,6 @@ package graft.core
 
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 /** The pipeline DSL — the reference's task/DAG surface re-expressed on
   * Spark's lazy, set-oriented model (SURVEY.md §2.1 C1–C8).
@@ -92,33 +91,13 @@ object Pipeline {
   def apply(stages: Stage*): Pipeline = Pipeline(stages.toVector)
 
   /** Fan-out (C3): feed one DataFrame to several branches. The fork point
-    * is persisted so branch actions don't recompute the shared prefix —
-    * the lazy-engine analogue of the reference duplicating an object to
-    * multiple downstream tasks.
+    * is kept cached ([[graft.CacheScope]]) so branch actions don't
+    * recompute the shared prefix — the lazy-engine analogue of the
+    * reference duplicating an object to multiple downstream tasks.
     */
-  def fanOut(
-      df: DataFrame,
-      branches: Map[String, Pipeline],
-      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): Map[String, DataFrame] = {
-    val shared = if (branches.size > 1) df.persist(storage) else df
+  def fanOut(df: DataFrame, branches: Map[String, Pipeline]): Map[String, DataFrame] = {
+    val shared = if (branches.size > 1) graft.CacheScope.keep(df) else df
     branches.map { case (name, p) => name -> p(shared) }
-  }
-
-  /** Resource-safe fan-out: run `use` over the branch outputs, then
-    * UNPERSIST the shared fork before returning. [[fanOut]] leaves the
-    * fork cached for the caller to manage — fine interactively, a leak
-    * in a long-lived service where every orphaned cache block squats on
-    * executor memory/disk until the session dies. Use this form when
-    * the branch ACTIONS complete inside the call.
-    */
-  def fanOutWith[A](
-      df: DataFrame,
-      branches: Map[String, Pipeline],
-      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK)(
-      use: Map[String, DataFrame] => A): A = {
-    val shared = if (branches.size > 1) df.persist(storage) else df
-    try use(branches.map { case (name, p) => name -> p(shared) })
-    finally if (branches.size > 1) shared.unpersist()
   }
 
   /** Fan-in (C4) for homogeneous branches: union by column name. */
@@ -132,14 +111,12 @@ object Pipeline {
   /** Conditional routing (C6): rows matching `cond` flow through
     * `ifTrue`, the rest through `ifFalse`; outputs re-merge by name.
     * Branch pipelines must converge to union-compatible schemas —
-    * `validate` catches divergence pre-flight.
-    * Caching contract: the input is persisted (both branches read it);
-    * the caller unpersists after acting — or uses [[fanOutWith]]'s
-    * managed pattern for long-lived services.
+    * `validate` catches divergence pre-flight. The input is kept cached
+    * ([[graft.CacheScope]]): both branches read it.
     */
   def route(cond: org.apache.spark.sql.Column, ifTrue: Pipeline, ifFalse: Pipeline)(
       df: DataFrame): DataFrame = {
-    val shared = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val shared = graft.CacheScope.keep(df)
     // null-safe split: a null predicate must route somewhere (the false
     // branch), or rows vanish — filter(c) and filter(!c) BOTH drop nulls
     ifTrue(shared.filter(cond <=> true)).unionByName(ifFalse(shared.filter(!(cond <=> true))))
@@ -149,12 +126,11 @@ object Pipeline {
     * continue; the rest are returned separately for a quarantine sink.
     * Row-level "exceptions" in a vectorized engine are predicates, not
     * throws — anything that would throw (bad cast, malformed JSON) is
-    * expressed with try_/null-safe functions and caught here.
-    * Caching contract: same as [[route]] — caller unpersists the input
-    * after both sides are acted on.
+    * expressed with try_/null-safe functions and caught here. The input
+    * is kept cached, as in [[route]].
     */
   def deadLetter(df: DataFrame, isValid: org.apache.spark.sql.Column): (DataFrame, DataFrame) = {
-    val shared = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val shared = graft.CacheScope.keep(df)
     // try_/null-safe expressions signal "bad row" with NULL — exactly the
     // rows this split exists to quarantine. A plain filter(isValid) /
     // filter(!isValid) pair drops them from BOTH sides (ok ∪ dead ≠ input);

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{ScaleConfig, Tables}
+import graft.{CacheScope, ScaleConfig, Tables}
 import graft.ops.{Curation, Drift, Selection, Validate}
 import graft.text.{Dedup, TextAnalysis}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,15 +54,20 @@ object PretrainPipeline {
   /** Runs the pipeline on an already-loaded documents table (tests
     * inject malformed rows here to drive the dead-letter path).
     *
+    * The run is one [[graft.CacheScope]]: every frame it caches is
+    * released when it returns or throws, and its shard directory is
+    * deleted once the shards are counted.
+    *
     * @param deadLetterDir where quarantined rows land WITH their
     *        violation names — an operator triaging a batch reads this
     *        path, so it must be a real, shared-filesystem sink on a
     *        cluster (HDFS/S3), not a driver-local temp dir. Defaults
-    *        to a temp dir only for the local example/test runs, and is
-    *        always announced on stdout so the rows are findable.
+    *        to a fresh temp dir only for the local example/test runs,
+    *        announced on stdout so the rows are findable; a caller who
+    *        passes none owns that directory and deletes it.
     */
   def runDetailed(spark: SparkSession, rawDocs: DataFrame,
-      deadLetterDir: Option[String] = None): Seq[Stage] = {
+      deadLetterDir: Option[String] = None): Seq[Stage] = CacheScope {
     val stats = Seq.newBuilder[Stage]
     var t0 = System.nanoTime()
     def rec(name: String, rows: Long, tokens: Long = -1L): Unit = {
@@ -88,12 +94,12 @@ object PretrainPipeline {
     // batches — an overwrite would destroy a prior batch's quarantined
     // rows before anyone triaged them. The count is THIS run's rows
     // (the persisted split side), not the accumulated sink total.
-    val q = quarantine.withColumn("violations", concat_ws(",", col("violations")))
-      .persist()
+    val q = CacheScope.keep(
+      quarantine.withColumn("violations", concat_ws(",", col("violations"))))
     q.write.mode("append").parquet(dl)
     println(s"[pretrain] dead-letter sink: $dl")
     rec("quarantined", q.count())
-    q.unpersist(blocking = false)
+    CacheScope.release(q)
     val docs = validDocs
       .withColumn("n_tok", TextAnalysis.tokenCount(col("text")).cast("long"))
     recDf("validated", docs)
@@ -103,12 +109,11 @@ object PretrainPipeline {
     // persisted across the lm_quality stage (r10): lmScore's build-time
     // stats action AND the lmKept join both replay this frame — without
     // the cache the tokenize + repetition filters run twice more inside
-    // one stage. Unpersisted right after lmKept materializes.
-    val quality = docs
+    // one stage. Released right after lmKept materializes.
+    val quality = CacheScope.keep(docs
       .filter(col("n_tok").between(10, 1000))
       .filter(size(toks) < 3 ||
-        TextAnalysis.repetitionRatioOfTokens(toks, 3) <= 0.2)
-      .persist()
+        TextAnalysis.repetitionRatioOfTokens(toks, 3) <= 0.2))
     recDf("quality", quality)
 
     // 1b. reference-LM perplexity gate (the CCNet shape, self-trained:
@@ -122,14 +127,13 @@ object PretrainPipeline {
       refFilter = lit(true))
     // persisted: every downstream stage action replays its lineage, and
     // replaying the LM build + scoring join per stage would multiply the
-    // whole pipeline's cost ~7x (measured). Unpersisted at the end.
-    val lmKept = quality.join(
+    // whole pipeline's cost ~7x (measured).
+    val lmKept = CacheScope.keep(quality.join(
       lmScores.filter(col("__nll") <= lit(3496508L) * col("__nb"))
         .select("doc_id"),
-      Seq("doc_id"))
-      .persist()
+      Seq("doc_id")))
     recDf("lm_quality", lmKept)
-    quality.unpersist(blocking = false)
+    CacheScope.release(quality)
 
     // 2. outlier trim: drop the length tails (truncation / concat accidents)
     val trimmed = Curation.quantileBand(lmKept, "n_chars", 0.05, 0.95)
@@ -148,8 +152,8 @@ object PretrainPipeline {
 
     // 3. near-dup cluster dedup: transitive chains collapse, best doc wins
     val pairs = Dedup.ngramJaccard(trimmed, "doc_id", "text", 3, 0.5)
-    val deduped = Dedup.dedupByCluster(trimmed, pairs, "doc_id", "n_chars")
-      .persist()
+    val deduped = CacheScope.keep(
+      Dedup.dedupByCluster(trimmed, pairs, "doc_id", "n_chars"))
     recDf("deduped", deduped)
 
     // 4. decontaminate against the held-out benchmark slice — exact
@@ -157,19 +161,18 @@ object PretrainPipeline {
     //    catches lightly rewritten leaks exact n-grams miss. The bench
     //    slice is the broadcast side of BOTH passes — persisted so its
     //    shingle/banding build runs once, not once per consumer action.
-    val bench = docs.filter(pmod(col("doc_id"), lit(7)) === 0).persist()
-    val exactClean = Dedup.decontaminate(
+    val bench = CacheScope.keep(docs.filter(pmod(col("doc_id"), lit(7)) === 0))
+    val exactClean = CacheScope.keep(Dedup.decontaminate(
       deduped.filter(pmod(col("doc_id"), lit(7)) =!= 0), bench,
-      "doc_id", "text", n = 8).persist()
+      "doc_id", "text", n = 8))
     recDf("decontaminated", exactClean)
-    val clean = Dedup.decontaminateFuzzy(exactClean, bench,
-      "doc_id", "text", shingleLen = 3, b = 16, r = 4, threshold = 0.8)
-      .persist()
+    val clean = CacheScope.keep(Dedup.decontaminateFuzzy(exactClean, bench,
+      "doc_id", "text", shingleLen = 3, b = 16, r = 4, threshold = 0.8))
     recDf("decontaminated_fuzzy", clean)
 
     // 4b. domain cap: no source may dominate what the mixer sees
-    val capped = Curation.capPerSource(clean, "source", "doc_id", cap = 20)
-      .persist()
+    val capped = CacheScope.keep(
+      Curation.capPerSource(clean, "source", "doc_id", cap = 20))
     recDf("capped", capped)
 
     // 5. resample surviving sources to a uniform token mixture
@@ -189,8 +192,8 @@ object PretrainPipeline {
     // are tiny regardless of how deep the pipeline grew (the
     // connectedComponents discipline). On a cluster, swap for a
     // reliable checkpoint dir exactly as cc documents.
-    val mixed = Curation.sourceMix(capped, "source", "n_tok", weights, u)
-      .localCheckpoint()
+    val mixed = CacheScope.checkpoint(
+      Curation.sourceMix(capped, "source", "n_tok", weights, u))
     recDf("mixed", mixed)
 
     // 5b. mix audit: before committing the blend, score each surviving
@@ -236,13 +239,14 @@ object PretrainPipeline {
     rec("sequences", seqStats.getLong(0))
     rec("boundary_docs", seqStats.getLong(1))
 
-    // 8. sharded write: one file per range shard, order preserved
-    val out = java.nio.file.Files.createTempDirectory("pretrain_shards").toString
-    shuffled.write.mode("overwrite").parquet(out)
-    rec("shard_files", new java.io.File(out).listFiles()
-      .count(_.getName.endsWith(".parquet")).toLong)
-    Seq(lmKept, deduped, bench, exactClean, clean, capped)
-      .foreach(_.unpersist(blocking = false))
+    // 8. sharded write: one file per range shard, order preserved; the
+    //    shards are counted, then their directory is deleted
+    val out = new Path(java.nio.file.Files.createTempDirectory("pretrain_shards").toString)
+    try {
+      shuffled.write.mode("overwrite").parquet(out.toString)
+      rec("shard_files", new java.io.File(out.toString).listFiles()
+        .count(_.getName.endsWith(".parquet")).toLong)
+    } finally out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
     stats.result()
   }
 

@@ -306,11 +306,10 @@ object Curation {
     // persisted: consumed by the edge enumerator's two self-join
     // branches (the classPairs measurement — ~8x at 100× uncached),
     // by the CC-side materialization, and by the two expansion joins
-    val cls = docs.groupBy(col("text"))
+    val cls = graft.CacheScope.keep(docs.groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("__m"),
         min(struct((-col("n_chars")).as("negq"), col("doc_id").as("kid")))
-          .as("__keep"))
-      .persist()
+          .as("__keep")))
     val pairs = Dedup.ngramJaccard(cls.select(col("doc_id"), col("text")),
       "doc_id", "text", shingleLen = 3, threshold = 0.5)
     val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
@@ -387,15 +386,12 @@ object Curation {
     * ASYMMETRIC self-join branches that each re-run the corpus text
     * aggregate AND the shingle build (q264/q265 at 100×: ~3 s cached →
     * ~25 s uncached, fresh-JVM confirmed). The frame is distinct-
-    * content-sized (MBs at any amp factor); ContextCleaner reclaims it
-    * when the plan goes unreachable — the adjudicated lazy-builder
-    * lifecycle.
+    * content-sized (MBs at any amp factor).
     */
   private def classPairs(docs: DataFrame, idCol: String, simCol: String)(
       pairFn: DataFrame => DataFrame): DataFrame = {
-    val cls = docs.groupBy(col("text"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("__m"))
-      .persist()
+    val cls = graft.CacheScope.keep(docs.groupBy(col("text"))
+      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("__m")))
     pairFn(cls.select(col(idCol), col("text")))
       .join(cls.select(col(idCol).as("id_a"), col("__m").as("m_a")), Seq("id_a"))
       .join(cls.select(col(idCol).as("id_b"), col("__m").as("m_b")), Seq("id_b"))
@@ -441,10 +437,9 @@ object Curation {
   def embedClasses(spark: SparkSession, dir: String): DataFrame = {
     // persisted for the same measured reason as classPairs' cls (the
     // broadcast self-join consumes the class frame on both sides)
-    val cls = Tables.load(spark, dir, "embeddings")
+    val cls = graft.CacheScope.keep(Tables.load(spark, dir, "embeddings")
       .groupBy(col("embedding"))
-      .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("__m"))
-      .persist()
+      .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("__m")))
     Similarity.nearDupCosine(cls.select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", threshold = 0.35)
       .join(cls.select(col("vec_id").as("id_a"), col("__m").as("m_a")), Seq("id_a"))
@@ -1384,10 +1379,9 @@ object Curation {
     * ratio 8.34) re-measured in SCALE100_r11.
     */
   def boilerplateStats(spark: SparkSession, dir: String): DataFrame = {
-    val cls = Tables.load(spark, dir, "documents")
+    val cls = graft.CacheScope.keep(Tables.load(spark, dir, "documents")
       .groupBy(col("source"), col("text"))
-      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("__m"))
-      .persist()
+      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("__m")))
     val bp = cls
       .select(col("__m"),
         explode(array_distinct(Boilerplate.ngrams(col("text"), 3))).as("ngram"))
@@ -2182,16 +2176,13 @@ object Curation {
     // per-(class, tag) multiplicities AND representatives from the
     // cached frame; the corpus is never touched again. Value-identical:
     // class id is still min(doc_id) over byte-identical texts.
-    // Persist note: lazy-builder persist without an unpersist site is
-    // the accepted pattern for distinct-content-bounded frames
-    // (Graph.brandEdges, Curation:352); ContextCleaner reaps it.
-    // materialized EAGERLY (PlanMode.eager; skipped by plan-only
-    // tooling): the consumers below launch as concurrent
+    // Materialized EAGERLY (CacheScope.eager; skipped in a plan-only
+    // scope): the consumers below launch as concurrent
     // broadcast-build futures, and a not-yet-materialized cache is
     // recomputed by every concurrent job (measured at 100×: seven
     // duplicate ~40 s corpus aggregates racing; with the eager count
     // the corpus is aggregated exactly once)
-    val byTextTag = graft.PlanMode.eager(
+    val byTextTag = graft.CacheScope.eager(
       tagged.groupBy(col("text"), col("__tag"))
         .agg(count(lit(1)).as("__mt"), min(col("doc_id")).as("__tmin")))
     val keyCls = byTextTag.groupBy(col("text"))
@@ -2227,7 +2218,7 @@ object Curation {
     // ≤ |tags|² rows; persisted because callers fan the cell frame into
     // several consumers (share denominators, rate joins) and one
     // evaluation of the rep-pair machinery above should serve them all
-    val cells = graft.PlanMode.eager(within.unionByName(cross)
+    val cells = graft.CacheScope.eager(within.unionByName(cross)
       .groupBy(col("tag_a"), col("tag_b"))
       .agg(sum(col("__n")).as("n_pairs"))
       .filter(col("n_pairs") > 0)) // eager, like byTextTag
@@ -2380,13 +2371,12 @@ object Curation {
       .join(cls.select(col("__cls").as("id"), col("__m")), "id")
       .select(explode(col("sh")).as("s"), col("__m"))
       .groupBy(col("s")).agg(sum(col("__m")).as("__df"))
-    val buckets = sh
+    val buckets = graft.CacheScope.keep(sh
       .withColumn("df_bucket", length(bin(col("__df"))) - 1)
       .groupBy(col("df_bucket"))
       .agg(count(lit(1)).as("n_shingles"),
         sum(col("__df")).as("postings"),
-        sum(shiftright(col("__df") * (col("__df") - 1), 1)).as("cand_pairs"))
-      .persist()
+        sum(shiftright(col("__df") * (col("__df") - 1), 1)).as("cand_pairs")))
     val tot = buckets.agg(sum(col("cand_pairs")).as("__t"))
     buckets.crossJoin(broadcast(tot))
       .select(col("df_bucket"), col("n_shingles"), col("postings"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{CacheScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -59,13 +59,8 @@ object Graph {
     * Identical output by the support bound (round-7 fix: the unpruned
     * form was the single most expensive query at 100× — 127.5 s).
     *
-    * Caching lifecycle: the per-basket array relation is `persist()`ed
-    * (basket count, support and the pair stage all read it); the
-    * blocks are released by Spark's ContextCleaner when the returned
-    * plan is garbage-collected. A long-lived session issuing MANY such
-    * plans should hold few references or `spark.catalog.clearCache()`
-    * between batches, or the accumulated blocks can evict more useful
-    * cache. Same lifecycle: [[triangles]], [[Recommend.itemCosine]].
+    * The per-basket array relation is kept cached ([[graft.CacheScope]]):
+    * basket count, support and the pair stage all read it.
     *
     * `maxBasketSize`: optional LOSSY guard for adversarial baskets
     * (a basket with 10⁵ frequent items still fans out C(10⁵,2) pairs).
@@ -83,13 +78,11 @@ object Graph {
     // persisted per-basket array table then feeds basket count,
     // support, and the pair stage — without the cache Spark re-derives
     // the whole upstream per consumer (measured: the dominant cost of
-    // q107 at 100×). ContextCleaner reclaims the blocks when the
-    // returned plan is garbage-collected.
-    val grouped0 = df
+    // q107 at 100×).
+    val grouped0 = CacheScope.keep(df
       .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .groupBy(col("__b"))
-      .agg(sort_array(collect_set(col("__i"))).as("__xs"))
-      .persist()
+      .agg(sort_array(collect_set(col("__i"))).as("__xs")))
     val nBaskets = grouped0.agg(count(lit(1)).as("__n"))
     // supp is the FULL per-item support — conf/lift denominators are
     // defined over the whole corpus, independent of any pruning below.
@@ -166,8 +159,8 @@ object Graph {
     // edges from a basket co-count aggregate) would otherwise be
     // re-derived per read (see kHopDistances for the cluster
     // checkpoint note)
-    val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint()
+    val e = CacheScope.checkpoint(
+      edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
     val tri = e
       .join(e.select(col("a").as("b"), col("b").as("c")), "b")
       .join(e.select(col("a"), col("b").as("c")), Seq("a", "c"))
@@ -194,17 +187,17 @@ object Graph {
     // and the final plan is O(maxHops × |edge plan|). localCheckpoint
     // trades fault tolerance for speed; a cluster job pointing at
     // 100 TB should setCheckpointDir and use reliable checkpoint()
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .localCheckpoint()
+    val e = CacheScope.checkpoint(
+      edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")))
     var dist = e.sparkSession.range(1)
       .select(source.as("node"), lit(0).as("dist"))
     for (hop <- 1 to maxHops) {
-      val next = dist.filter(col("dist") === hop - 1)
+      val reached = dist.filter(col("dist") === hop - 1)
         .join(e, col("node") === col("__s"))
         .select(col("__d").as("node"), lit(hop).as("dist"))
-      dist = dist.union(next)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+      val next = CacheScope.checkpoint(dist.union(reached)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
+      CacheScope.release(dist); dist = next
     }
     dist
   }
@@ -346,9 +339,9 @@ object Graph {
     // checkpoint + collect jobs cost more dispatch than the removed
     // exchanges saved; amp100 fresh-JVM q112 3.2 s → 5.0 s — and was
     // dropped.)
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      col(wCol).as("__w")).localCheckpoint()
-    val v = nodes.select(col(nodeCol).as("node")).distinct().localCheckpoint()
+    val e = CacheScope.checkpoint(edges.select(col(srcCol).as("__s"),
+      col(dstCol).as("__d"), col(wCol).as("__w")))
+    val v = CacheScope.checkpoint(nodes.select(col(nodeCol).as("node")).distinct())
     val nN = v.count()
     var ranks = v.withColumn("rank", lit(1.0 / nN))
     for (_ <- 1 to iters) {
@@ -356,12 +349,12 @@ object Graph {
           col("node") === col("__s"))
         .groupBy(col("__d").as("node"))
         .agg(sum(col("rank") * col("__w")).as("__m"))
-      ranks = v.join(graft.ScaleConfig.scalingBroadcast(contrib),
+      val next = CacheScope.checkpoint(v.join(graft.ScaleConfig.scalingBroadcast(contrib),
           Seq("node"), "left")
         .select(col("node"),
           (lit((1.0 - d) / nN) + lit(d) * coalesce(col("__m"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint()
+            .as("rank")))
+      CacheScope.release(ranks); ranks = next
     }
     ranks
   }
@@ -387,13 +380,13 @@ object Graph {
     // the whole basket build.
     val grouped = brandBaskets(spark, dir)
       .groupBy(col("bid")).agg(sort_array(collect_set(col("item"))).as("__xs"))
-    val co = grouped.select(explode(flatten(transform(col("__xs"),
+    val co = CacheScope.keep(grouped
+      .select(explode(flatten(transform(col("__xs"),
         (x, i) => transform(
           slice(col("__xs"), i + lit(2), size(col("__xs"))),
           y => struct(x.as("a"), y.as("b")))))).as("__p"))
       .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
-      .agg(count(lit(1)).as("co"))
-      .persist()
+      .agg(count(lit(1)).as("co")))
     val cut = co.agg(avg(col("co")).as("__cut"))
     co.crossJoin(broadcast(cut)).filter(col("co") >= col("__cut"))
       .select(col("a"), col("b"))
@@ -479,7 +472,7 @@ object Graph {
     // eagerly materialized (r11 ADVICE): nd/dfreq/kept consume fps as
     // concurrent broadcast builds — racing an unmaterialized cache
     // would duplicate the fingerprint subtree per consumer
-    val fps = graft.PlanMode.eager(
+    val fps = CacheScope.eager(
       winnowFingerprints(classes, "doc", "__txt", k, w))
     // multiplicity-aware document frequency: a class's fingerprint set
     // is shared by all m of its members, and so is its presence in the
@@ -518,7 +511,7 @@ object Graph {
     // joins below each re-execute their input subtree
     // NULL-SAFE join (r11 ADVICE): keeps any null-text class's members
     // attached, the same rule as Dedup.collapsedDocPairs members
-    val ids = graft.PlanMode.eager(
+    val ids = CacheScope.eager(
       docs.select(col(idCol).as("__did"), col(textCol).as("__txt"))
         .join(frame.select(col("__txt").as("__ftxt"), col("__cls")),
           col("__txt") <=> col("__ftxt"))
@@ -662,31 +655,33 @@ object Graph {
     // checkpointed frame itself. (A further variant with per-group-key
     // edge copies + driver-collected tot was measured SLOWER — see the
     // pageRank note — and dropped.)
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      col(wCol).as("__w")).localCheckpoint()
-    val v = nodes.select(col(nodeCol).as("node")).distinct().localCheckpoint()
+    val e = CacheScope.checkpoint(edges.select(col(srcCol).as("__s"),
+      col(dstCol).as("__d"), col(wCol).as("__w")))
+    val v = CacheScope.checkpoint(nodes.select(col(nodeCol).as("node")).distinct())
     // one half-step: edges ⋈ broadcast state → aggregate → left-attach
     // to v (keeps zero-in/out nodes) → checkpoint raw → lazily
-    // L1-normalize by the 1-row total of the CHECKPOINTED frame
+    // L1-normalize by the 1-row total of the CHECKPOINTED frame;
+    // returns (checkpointed raw, normalized)
     def halfStep(state: DataFrame, stateCol: String,
-        joinKey: String, groupKey: String, outCol: String): DataFrame = {
-      val raw = v.join(graft.ScaleConfig.scalingBroadcast(
+        joinKey: String, groupKey: String, outCol: String): (DataFrame, DataFrame) = {
+      val raw = CacheScope.checkpoint(v.join(graft.ScaleConfig.scalingBroadcast(
           e.join(graft.ScaleConfig.scalingBroadcast(state),
               col("node") === col(joinKey))
             .groupBy(col(groupKey))
             .agg(sum(col(stateCol) * col("__w")).as("__m"))),
           col("node") === col(groupKey), "left")
-        .select(col("node"), coalesce(col("__m"), lit(0.0)).as(outCol))
-        .localCheckpoint()
+        .select(col("node"), coalesce(col("__m"), lit(0.0)).as(outCol)))
       val tot = raw.agg(sum(col(outCol)).as("__t"))
-      raw.crossJoin(broadcast(tot))
-        .select(col("node"), (col(outCol) / col("__t")).as(outCol))
+      (raw, raw.crossJoin(broadcast(tot))
+        .select(col("node"), (col(outCol) / col("__t")).as(outCol)))
     }
-    var hub = v.withColumn("h", lit(1.0))
-    var auth = v.withColumn("a", lit(1.0))
+    var (hub, auth) = (v.withColumn("h", lit(1.0)), v.withColumn("a", lit(1.0)))
+    var held = Seq.empty[DataFrame] // the previous iteration's checkpoints
     for (_ <- 1 to iters) {
-      auth = halfStep(hub, "h", "__s", "__d", "a")
-      hub = halfStep(auth, "a", "__d", "__s", "h")
+      val (authRaw, a) = halfStep(hub, "h", "__s", "__d", "a")
+      val (hubRaw, h) = halfStep(a, "a", "__d", "__s", "h")
+      held.foreach(CacheScope.release)
+      held = Seq(authRaw, hubRaw); auth = a; hub = h
     }
     auth.join(graft.ScaleConfig.scalingBroadcast(hub), "node")
   }
@@ -728,7 +723,7 @@ object Graph {
     * at |nodes| rows), one global aggregate, ONE row out.
     */
   def assortativityQuery(spark: SparkSession, dir: String): DataFrame = {
-    val e = brandEdges(spark, dir).localCheckpoint()
+    val e = CacheScope.checkpoint(brandEdges(spark, dir))
     val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
     val deg = sym.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -761,7 +756,7 @@ object Graph {
     * list; cc is ONE division; deg ≤ 1 nodes are null, never NaN.
     */
   def clusteringQuery(spark: SparkSession, dir: String): DataFrame = {
-    val e = brandEdges(spark, dir).localCheckpoint()
+    val e = CacheScope.checkpoint(brandEdges(spark, dir))
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))

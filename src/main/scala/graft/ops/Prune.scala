@@ -42,17 +42,11 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
 object Prune {
 
   /** A built filter: the one-row words DataFrame plus its geometry.
-    * Apply with [[KeyFilter.prune]]; reuse across any number of scans.
-    * The words row is `persist()`ed by [[bloomFor]] so rebuilds never
-    * recompute the key aggregate — call [[release]] when a long-lived
-    * session is done with the filter (otherwise the block lives until
-    * the KeyFilter is garbage-collected).
+    * Apply with [[KeyFilter.pruned]]; reuse across any number of scans.
+    * [[bloomFor]] keeps the words row cached ([[graft.CacheScope]]) so
+    * rebuilds never recompute the key aggregate.
     */
   final case class KeyFilter(bf: DataFrame, mBits: Int, k: Int, keyType: DataType) {
-
-    /** Drop the cached words block (idempotent; the filter remains
-      * usable — the words just recompute on next use). */
-    def release(): Unit = { bf.unpersist(); () }
 
     /** `df` with the rows whose `key` cannot be in the build set
       * removed (nulls never pass — a null never equi-joins). One
@@ -117,7 +111,7 @@ object Prune {
       val n = math.max(distinctKeys.count(), 1L)
       val (m, k) = sizing(n, fpp)
       // the words materialize while the key set is still cached
-      val words = Bloom.build(distinctKeys, "__key", m, k).persist()
+      val words = graft.CacheScope.keep(Bloom.build(distinctKeys, "__key", m, k))
       words.count()
       KeyFilter(words, m, k, keyType)
     } finally distinctKeys.unpersist()

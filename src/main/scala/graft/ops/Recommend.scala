@@ -33,20 +33,16 @@ object Recommend {
     * input, where the historical strict-< self-join silently didn't) —
     * callers need no uniqueness precondition.
     *
-    * Caching lifecycle: the pre-aggregated interaction relation is
-    * `persist()`ed (norms and the pair stage both read it, and the
-    * upstream is typically a multi-join aggregate that would otherwise
-    * re-derive per consumer); the blocks are released by Spark's
-    * ContextCleaner when the returned plan is garbage-collected, so a
-    * long-lived session issuing many such plans should either hold few
-    * references or `spark.catalog.clearCache()` between batches. */
+    * The pre-aggregated interaction relation is kept cached
+    * ([[graft.CacheScope]]): norms and the pair stage both read it, and
+    * the upstream is typically a multi-join aggregate that would
+    * otherwise re-derive per consumer. */
   def itemCosine(
       df: DataFrame, entityCol: String, itemCol: String, countCol: String,
       minEntities: Long = 1L): DataFrame = {
-    val base = df.select(col(entityCol).as("__e"), col(itemCol).as("__i"),
-      col(countCol).as("__n"))
-      .groupBy(col("__e"), col("__i")).agg(sum(col("__n")).as("__n"))
-      .persist()
+    val base = graft.CacheScope.keep(df.select(col(entityCol).as("__e"),
+        col(itemCol).as("__i"), col(countCol).as("__n"))
+      .groupBy(col("__e"), col("__i")).agg(sum(col("__n")).as("__n")))
     val norms = base.groupBy(col("__i"))
       .agg(sum(col("__n") * col("__n")).as("__n2"))
     // pair enumeration without a self-join (the q107 round-7 form):

@@ -121,17 +121,12 @@ object Selection {
     // the dominant per-row cost, so it is persisted (r9 VERDICT #5).
     // It is the REDUCED (doc × distinct-bigram) frame, far below the
     // exploded bigram stream; materialized eagerly by the V probe just
-    // below. Nothing unpersists it, and ContextCleaner does not reap
-    // it either: the CacheManager holds the cached plan strongly, so
-    // it stays cached until the session ends (perfbench curate, seed 7,
-    // traced: `retained_cache_mb` 9.46 in 5 cached RDDs after the run).
-    // Releasing it is ROADMAP item 3.
-    val docBi = docs
+    // below.
+    val docBi = graft.CacheScope.keep(docs
       .select(ids :+ col("__ref") :+ explode(bigrams(col("__t"))).as("__bg"): _*)
       .groupBy(ids :+ col("__ref") :+ col("__bg.a").as("a") :+
         col("__bg.b").as("b"): _*)
-      .agg(count(lit(1)).as("m"))
-      .persist()
+      .agg(count(lit(1)).as("m")))
     val lm = docBi.filter(col("__ref"))
       .groupBy(col("a").as("__la"), col("b").as("__lb"))
       .agg(sum(col("m")).as("cab"))
@@ -538,7 +533,7 @@ object Selection {
         explode(transform(sequence(lit(1), size(col("__t")) - 7),
           i => concat_ws(" ", slice(col("__t"), i, lit(8))))).as("s"))
       .distinct()
-    graft.PlanMode.eager(g) // three consumers race the cache otherwise
+    graft.CacheScope.eager(g) // three consumers race the cache otherwise
     val sz = g.groupBy(col("source").as("__szs"))
       .agg(count(lit(1)).as("n_grams"))
     val inter = g.select(col("source").as("source_a"), col("s"))
@@ -601,7 +596,7 @@ object Selection {
     // construction, so persist + eager-materialize; the norm is a lazy
     // projection over the cache, so no dot ever evaluates below the
     // top-K.
-    val sample = graft.PlanMode.eager(Tables.load(spark, dir, "embeddings")
+    val sample = graft.CacheScope.eager(Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"),
           x => round(x.cast("double") * lit(1000000.0)).cast("long"))

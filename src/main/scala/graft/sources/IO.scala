@@ -45,12 +45,11 @@ object IO {
       schema: StructType): (DataFrame, DataFrame) = {
     require(!schema.fieldNames.contains("_corrupt_record"),
       "_corrupt_record is reserved for the dead-letter channel")
-    val df = spark.read
+    val df = graft.CacheScope.keep(spark.read
       .schema(schema.add("_corrupt_record", org.apache.spark.sql.types.StringType))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      .cache()
+      .json(path))
     (df.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),
       df.filter(col("_corrupt_record").isNotNull)
         .select(col("_corrupt_record").as("raw")))
@@ -62,13 +61,12 @@ object IO {
       header: Boolean = true, delimiter: String = ","): (DataFrame, DataFrame) = {
     require(!schema.fieldNames.contains("_corrupt_record"),
       "_corrupt_record is reserved for the dead-letter channel")
-    val df = spark.read
+    val df = graft.CacheScope.keep(spark.read
       .schema(schema.add("_corrupt_record", org.apache.spark.sql.types.StringType))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .option("header", header.toString).option("delimiter", delimiter)
-      .csv(path)
-      .cache()
+      .csv(path))
     (df.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),
       df.filter(col("_corrupt_record").isNotNull)
         .select(col("_corrupt_record").as("raw")))

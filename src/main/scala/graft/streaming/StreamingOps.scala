@@ -646,11 +646,14 @@ object StreamingOps {
   /** Micro-batch sink adapter: run any batch-writing function per
     * micro-batch (the standard escape hatch for sinks Spark lacks —
     * upserts, multi-table writes). The function receives the batch as a
-    * plain DataFrame plus its id for exactly-once bookkeeping.
+    * plain DataFrame plus its id for exactly-once bookkeeping. Each
+    * micro-batch is one [[graft.CacheScope]]: what the function caches
+    * is released when it returns, so a long-lived stream holds none.
     */
   def foreachBatchSink(df: DataFrame, name: String)(
       f: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.queryName(name).foreachBatch(f)
+    df.writeStream.queryName(name)
+      .foreachBatch((batch: DataFrame, id: Long) => graft.CacheScope(f(batch, id)))
 
   /** Streaming CDC apply: maintain a latest-record-per-key parquet
     * table from a change stream. Each micro-batch collapses to one row

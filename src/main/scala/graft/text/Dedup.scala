@@ -101,19 +101,13 @@ object Dedup {
     *    broadcast builds each replayed a ~670 s-executor-time window
     *    pass. The aggregate result is distinct-content-sized, so it is
     *    PERSISTED and eagerly materialized: every consumer reads the
-    *    cache, the corpus is touched exactly once. The persist has no
-    *    unpersist site, and ContextCleaner does NOT reap it: Spark's
-    *    CacheManager holds the cached plan strongly, so the frame stays
-    *    cached until the session ends (perfbench curate, seed 7,
-    *    traced: `retained_cache_mb` 9.46 in 5 cached RDDs after the
-    *    run). Giving every persisted frame an owner that releases it is
-    *    ROADMAP item 3.
+    *    cache, the corpus is touched exactly once.
     */
   def exactClassAgg(df: DataFrame, idCol: String, textCol: String,
       clsCol: String = "__cls", mCol: String = "__m"): DataFrame =
-    // eager persist (unless plan-only tooling): concurrent consumers
+    // eager persist (unless in a plan-only scope): concurrent consumers
     // would race an unmaterialized cache and duplicate the corpus pass
-    graft.PlanMode.eager(df.groupBy(col(textCol))
+    graft.CacheScope.eager(df.groupBy(col(textCol))
       .agg(min(col(idCol)).as(clsCol), count(lit(1)).as(mCol)))
 
   /** Collapse-then-expand wrapper for doc-grain pair enumerators —
@@ -172,7 +166,7 @@ object Dedup {
     // equality join would silently drop the null class from members;
     // <=> keeps those docs, matching both the raw operators and the
     // pre-r11 window form. EqualNullSafe is still a hash-join key.
-    val members = graft.PlanMode.eager(
+    val members = graft.CacheScope.eager(
       df.select(col(idCol).as("__did"), col(textCol).as("__txt"))
         .join(frame.select(col("__txt").as("__ftxt"), col("__cls")),
           col("__txt") <=> col("__ftxt"))
@@ -620,7 +614,7 @@ object Dedup {
         r.foreachPartition(_ => ()) // materialize + write the checkpoint now
         r.unpersist(blocking = false) // reads now come from reliable storage
         (session.createDataFrame(r, df.schema), r.getCheckpointFile)
-      } else (df.localCheckpoint(), None)
+      } else (graft.CacheScope.checkpoint(df), None)
     def dropCheckpoint(file: Option[String]): Unit = file.foreach { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
@@ -647,7 +641,7 @@ object Dedup {
         .join(labels.withColumnRenamed("cluster_id", "prev"), Seq("id"))
         .filter(col("cluster_id") < col("prev"))
         .limit(1).count()
-      labels.unpersist()
+      graft.CacheScope.release(labels)
       dropCheckpoint(labelsCkpt) // superseded: next is durable, changed computed
       labels = next
       labelsCkpt = nextCkpt

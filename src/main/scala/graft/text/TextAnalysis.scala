@@ -175,7 +175,7 @@ object TextAnalysis {
     val frame = Dedup.exactClassAgg(
       df.select(col(idCol).as("__did"), col(textCol).as("__txt")),
       "__did", "__txt")
-    val mem = graft.PlanMode.eager(
+    val mem = graft.CacheScope.eager(
       df.select(col(idCol).as("__did"), col(textCol).as("__txt"))
         .join(frame.select(col("__txt").as("__ftxt"), col("__cls")),
           col("__txt") <=> col("__ftxt"))

@@ -43,12 +43,7 @@ object BenchAmp {
 
     def oneSession(): (Map[String, Double], Bench.Floor) = {
       val spark = ScaleConfig.session(ScaleConfig.cluster)
-      Tables.names.foreach { n =>
-        try Tables.load(spark, ampDir, n).persist().count()
-        catch { case e: Throwable =>
-          System.err.println(s"[benchamp] load $n failed: ${e.getMessage}")
-        }
-      }
+      Tables.persistAll(spark, ampDir)
       val timed = Bench.passes(spark, ampDir, allNames, warm = 2, timed = 5, errors)
       val medians = allNames
         .map { n => n -> timed.flatMap(_.get(n)).map(_._1) }

@@ -29,9 +29,11 @@ object NoBroadcastVerify {
     new java.io.File(outDir).mkdirs()
 
     val planFacts = queries.map { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      val p = graft.CacheScope {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      }
       val facts = Seq(
         "sort_merge_join" -> p.contains("SortMergeJoin"),
         "shuffled_hash_join" -> p.contains("ShuffledHashJoin"),
@@ -43,19 +45,7 @@ object NoBroadcastVerify {
     }
     Files.writeString(Paths.get(s"$outDir/nobroadcast_plans.json"),
       planFacts.mkString("{", ",\n ", "}"))
-
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(e => queries.contains(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeOracleSql(outDir, queries.contains)
     println(s"dumped ${queries.size} queries under autoBroadcastJoinThreshold=-1 to $outDir")
     spark.stop()
   }

@@ -17,9 +17,8 @@ object PlanSummary {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outJson = if (args.length > 1) args(1) else "/tmp/plan_summary.json"
     val spark = Plans.session()
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val df = fn(spark, sfDir)
-      val p = df.queryExecution.executedPlan.toString
+    val rows = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val p = Plans.planOf(spark, sfDir, name)(_.executedPlan.toString)
       def n(re: String) = re.r.findAllIn(p).size
       val scans = "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(p)
         .map(_.group(1).count(_ == ',') + 1).toSeq

@@ -16,21 +16,25 @@ import org.apache.spark.sql.execution.FormattedMode
 object Plans {
 
   /** The plan-dump session ([[graft.tools.PlanSummary]] shares it): the
-    * plain posture with AQE off, so the dumped plan is the final one,
-    * and plan-only mode, so building a query runs no jobs. */
+    * plain posture with AQE off, so the dumped plan is the final one. */
   def session(): SparkSession = {
     val spark = ScaleConfig.session(ScaleConfig.plain)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.PlanMode.planOnly = true
     spark
   }
+
+  /** `show` of query `name`'s plan, taken inside a plan-only
+    * [[graft.CacheScope]]: building the query runs no eager counts, and
+    * nothing it caches outlives the call. */
+  def planOf[A](spark: SparkSession, dir: String, name: String)(
+      show: org.apache.spark.sql.execution.QueryExecution => A): A =
+    graft.CacheScope.planOnly(show(SparkEntry.queries(name)(spark, dir).queryExecution))
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val only = args.drop(1).toSeq
     val spark = session()
-    def plan(name: String): String =
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+    def plan(name: String): String = planOf(spark, sfDir, name)(_.explainString(FormattedMode))
     if (only.nonEmpty) only.foreach(name => println(s"== $name ==\n${plan(name)}"))
     else {
       val sb = new StringBuilder

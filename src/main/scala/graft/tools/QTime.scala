@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.{Bench, ScaleConfig, Tables}
 import org.apache.spark.metrics.source.CodegenMetrics
-import scala.util.control.NonFatal
 
 /** Ad-hoc single-query timer for scale-fix verification: runs the named
   * registry queries against a corpus dir under the cluster posture
@@ -21,13 +20,7 @@ object QTime {
     val dir = args(0)
     val names = args.drop(1).toSeq
     val spark = ScaleConfig.session(ScaleConfig.cluster)
-    // A table that fails to load breaks its queries, not the run.
-    val loaded = Tables.names.filter { n =>
-      try { Tables.load(spark, dir, n).persist().count(); true }
-      catch { case NonFatal(e) =>
-        System.err.println(s"[qtime] load $n failed: ${e.getMessage}"); false
-      }
-    }
+    val loaded = Tables.persistAll(spark, dir)
     // burn-in: absorb the cache-materialization eviction/GC churn before
     // anything is timed (the ScaleCheck discipline — without it the
     // first query reads 2-10x its steady-state time at 100x)

@@ -92,13 +92,13 @@ object ScaleCheck {
       } else Map.empty
     val spark = graft.ScaleConfig.session(graft.ScaleConfig.cluster)
 
-    Tables.names.foreach(n => Tables.load(spark, dir, n).persist().count())
+    val loaded = Tables.persistAll(spark, dir)
     // burn-in: at 100x the ~20 GB cache materialization leaves several
     // seconds of eviction/GC churn that lands on whichever queries run
     // first (r8: the alphabetically-first q03/q05/q09 read 17-58x
     // ratios that re-measured standalone at 2-10x). A second full-scan
     // pass over the cached tables absorbs it before anything is timed.
-    Tables.names.foreach(n => Tables.load(spark, dir, n).count())
+    loaded.foreach(n => Tables.load(spark, dir, n).count())
 
     // BNLJ is a scale-killer only when BOTH sides scale with the data.
     // q13 crossJoins a broadcast SINGLE-ROW query vector — the standard
@@ -242,12 +242,16 @@ object ScaleCheck {
     val superlinear = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
-      fn(spark, dir).collect() // warm: codegen + cache
+      // warm: codegen; each call is its own CacheScope, so the timed
+      // call pays for its own cached frames
+      graft.CacheScope(fn(spark, dir).collect())
       val t0 = System.nanoTime()
-      val df = fn(spark, dir)
-      val rows = df.collect().length
-      val sec = (System.nanoTime() - t0) / 1e9
-      val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      val (rows, sec, p) = graft.CacheScope {
+        val df = fn(spark, dir)
+        val rows = df.collect().length
+        (rows, (System.nanoTime() - t0) / 1e9,
+          df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
+      }
       val bad = p.contains("CartesianProduct") ||
         (p.contains("BroadcastNestedLoopJoin") && !scalarBroadcastOk(name) &&
           !exactBaselineBnljOk(name))

@@ -86,14 +86,12 @@ object SemanticDedup {
   /** Within-cell enumeration over a dim-guarded (id, v) frame. The
     * self-join scans `base` twice and cellAssignment is numCells
     * full-dim cosines per row — the dominant per-row cost — so `base`
-    * is persisted; ContextCleaner reclaims the blocks once the plan is
-    * unreachable. */
+    * is kept cached ([[graft.CacheScope]]). */
   private def pairsWithin(
       projected: DataFrame, tau: Double,
       centroids: IndexedSeq[Seq[Double]]): DataFrame = {
-    val base = projected
-      .withColumn("cell", Similarity.cellAssignment(col("v"), centroids))
-      .persist()
+    val base = graft.CacheScope.keep(projected
+      .withColumn("cell", Similarity.cellAssignment(col("v"), centroids)))
     base.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
       .join(base.select(col("cell"), col("id").as("id_b"), col("v").as("vb")), Seq("cell"))
       .filter(col("id_a") < col("id_b"))

@@ -577,10 +577,9 @@ object Similarity {
     // persisted: both the LSH banding and the verify step scan `base`
     // more than once — without the cache the dim guard and the
     // L×p-dot-product code array recompute per scan (the dominant
-    // per-row cost). ContextCleaner reclaims the blocks when the
-    // returned plan is garbage-collected.
-    val base = df.select(col(idCol).as("id"), requireDim(asDouble(col(vecCol)), dim).as("v"))
-      .persist()
+    // per-row cost).
+    val base = graft.CacheScope.keep(
+      df.select(col(idCol).as("id"), requireDim(asDouble(col(vecCol)), dim).as("v")))
     val pairs =
       if (useLsh) {
         val codes = array((0 until L).map(t => bucketCode(col("v"), dim, p, seed + t * 7919L)): _*)

@@ -6,7 +6,13 @@ import graft.examples.PretrainPipeline
 class ExamplesSpec extends SparkSpec {
 
   test("PretrainPipeline: monotone filtering, disjoint folds, sane packing") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def shardDirs() = tmp.listFiles().count(_.getName.startsWith("pretrain_shards"))
+    val (shards0, held0) = (shardDirs(), cacheHeld())
     val stats = PretrainPipeline.run(spark, sf).toMap
+    // the run releases every frame it cached and deletes its shards
+    assert(cacheHeld() == held0, "PretrainPipeline.run left frames cached")
+    assert(shardDirs() <= shards0, "PretrainPipeline.run left its shard directory behind")
     // every stage produced rows (the quarantine and the drift-audit
     // flag counts are rightly zero on a clean uniform corpus — the
     // poison test below drives the former; the audit keys are asserted

@@ -35,11 +35,50 @@ class InventorySpec extends SparkSpec {
 
   test("every registered query executes at sf0.001 and returns rows") {
     initQuiet()
-    val empty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      if (n == 0) Some(name) else None
+    // each query runs in its own CacheScope, and must leave the session
+    // holding exactly what it held before the query
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val before = cacheHeld()
+      val n = CacheScope(fn(spark, sf).count())
+      (name, n, cacheHeld() == before)
     }
+    val empty = runs.collect { case (name, 0L, _) => name }
     assert(empty.isEmpty, s"queries with zero rows at sf0.001: $empty")
+    val leaked = runs.collect { case (name, _, false) => name }
+    assert(leaked.isEmpty, s"queries that left frames cached after their scope: $leaked")
+  }
+
+  test("a plan-only scope builds a query with eager sites without running a job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    Tables.load(spark, sf, "documents").schema // the footer read happens once, here
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def group(p: java.util.Properties) =
+      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id"))).getOrElse("")
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(group(e.properties))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId.toString)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val before = cacheHeld()
+      sc.setJobGroup("plan-only", "building q143 in a plan-only scope")
+      // q143 reaches two CacheScope.eager sites (nearDupCellCounts)
+      val plan = CacheScope.planOnly(
+        SparkEntry.queries("q143_split_leakage")(spark, sf).queryExecution.executedPlan.toString)
+      sc.setJobGroup("sentinel", "marks the end of the listener events")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      // events arrive in order: once the sentinel job started, every
+      // job the build launched has been seen
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!started.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(started.contains("sentinel"), "listener never saw the sentinel job")
+      assert(plan.contains("InMemoryRelation"), s"no cached frame in the plan:\n$plan")
+      assert(!started.contains("plan-only"), s"building in a plan-only scope ran jobs: $started")
+      assert(cacheHeld() == before, "the plan-only scope left frames cached")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("flagship entry produces rows (driver smoke)") {

@@ -20,4 +20,15 @@ trait SparkSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   def initQuiet(): Unit = spark.sparkContext.setLogLevel("WARN")
+
+  /** What the session holds cached: the CacheManager's entry count and
+    * the ids of the persisted RDDs (cached frames, local checkpoints).
+    * `numCachedEntries` is `private[sql]` in Scala but public in the
+    * bytecode, hence the reflective call. */
+  def cacheHeld(): (Int, Set[Int]) = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    (cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int],
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
+  }
 }

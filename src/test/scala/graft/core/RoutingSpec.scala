@@ -2,6 +2,7 @@ package graft.core
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class RoutingSpec extends SparkSpec {
   import spark.implicits._
@@ -42,19 +43,24 @@ class RoutingSpec extends SparkSpec {
     assert(m == Map(1L -> "t", 2L -> "f", 3L -> "f"))
   }
 
-  test("fanOutWith unpersists the shared fork after use") {
+  test("a scope releases the fork") {
     val branches = Map(
       "pos" -> Pipeline(Stage("pos")(d => d.filter(col("v") > 0))),
       "neg" -> Pipeline(Stage("neg")(d => d.filter(col("v") <= 0))))
+    // a fork no other case caches, so this scope is what caches it
+    val fork = base.withColumn("w", col("v") * 2)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val counts = Pipeline.fanOutWith(base, branches) { outs =>
+    val counts = graft.CacheScope {
+      val outs = Pipeline.fanOut(fork, branches)
+      assert(fork.storageLevel != StorageLevel.NONE, "fork not cached inside the scope")
       outs.view.mapValues(_.count()).toMap
     }
     assert(counts == Map("pos" -> 2L, "neg" -> 1L))
-    // no NEW cache entry may survive the call (other tests' caches may
+    assert(fork.storageLevel == StorageLevel.NONE, "fork still cached after the scope")
+    // no NEW cache entry may survive the scope (other tests' caches may
     // come and go — only the fork created here matters)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"shared fork left persisted after fanOutWith: $leaked")
+    assert(leaked.isEmpty, s"shared fork left persisted after the scope: $leaked")
   }
 
   test("context-aware stages receive the run context (C8)") {
