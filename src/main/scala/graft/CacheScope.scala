@@ -23,7 +23,11 @@ import scala.collection.mutable
   * original still relies on.
   *
   * [[planOnly]] is the scope for plan-dump tools: [[eager]] persists but
-  * skips its count, so building a query runs no jobs for it.
+  * skips its count. [[checkpoint]] still runs the upstream it truncates,
+  * because the plan being dumped is the one that reads the checkpoint:
+  * a query with checkpoint sites (the Graph iterations,
+  * `Dedup.connectedComponents`) runs jobs even in a plan-only scope —
+  * q108 3, q112 18, q202 25, q42 11 at sf0.01.
   *
   * Outside any scope a kept frame has no owner: it stays cached until
   * the session ends or someone unpersists it.
@@ -39,7 +43,8 @@ object CacheScope {
   /** Run `body` in a scope that releases what it caches on exit. */
   def apply[A](body: => A): A = within(planOnly = false)(body)
 
-  /** [[apply]] for plan-dump tools: eager sites skip their count. */
+  /** [[apply]] for plan-dump tools: eager sites skip their count;
+    * checkpoint sites still run. */
   def planOnly[A](body: => A): A = within(planOnly = true)(body)
 
   private def within[A](planOnly: Boolean)(body: => A): A = {

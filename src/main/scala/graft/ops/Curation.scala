@@ -2147,7 +2147,7 @@ object Curation {
 
   /** Near-dup PAIR counts per unordered tag cell, with exact-duplicate
     * classes collapsed BEFORE the quadratic candidate machinery
-    * ([[Dedup.withExactClasses]]) — value-identical to counting
+    * ([[Dedup.exactClassAgg]]) — value-identical to counting
     * `ngramJaccard(docs)` pairs tagged per endpoint, by the
     * combinatorial identity in the collapse scaladoc: within a class
     * (identical texts ⇒ J = 1 ≥ t) the (tagA ≤ tagB) cell gets
@@ -2388,7 +2388,7 @@ object Curation {
 
   /** q245 — exact-twin compression audit per source (oracle-checked):
     * documents vs distinct-text classes, the duplication factor, and
-    * the REDUNDANT bytes a [[Dedup.withExactClasses]] collapse saves
+    * the REDUNDANT bytes a [[Dedup.exactClassAgg]] collapse saves
     * (Σ over classes of (m−1)·len(text), exact integers). The storage
     * and pair-join-cost rationale for running exact dedup FIRST —
     * companion to q244's candidate-volume readout. One (source, text)

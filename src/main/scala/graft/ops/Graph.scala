@@ -441,7 +441,7 @@ object Graph {
   /** q111 — winnowed near-dup candidates: document pairs sharing ≥ 3
     * rare winnowing fingerprints (k=4, w=8, df cap 10%). */
   /** Top-`topK` winnowing pairs with exact-duplicate classes collapsed
-    * BEFORE the pair machinery ([[graft.text.Dedup.withExactClasses]]):
+    * BEFORE the pair machinery ([[graft.text.Dedup.exactClassAgg]]):
     * fingerprints are text-functional, so the rare-fingerprint
     * inverted index holds one representative per distinct text
     * (document frequency still counts every document via the class

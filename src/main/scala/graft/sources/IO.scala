@@ -275,9 +275,8 @@ object IO {
     * same-key rows of the table at `path` (latest generation wins —
     * [[graft.ops.Relational.latestByKey]] with an internal generation
     * marker as the order column, so the merge is ONE hash aggregate,
-    * not a join), new keys insert, untouched keys carry over. Staged
-    * write + swap, same crash discipline as [[compact]]: `path` is
-    * never half-written.
+    * not a join), new keys insert, untouched keys carry over. Written
+    * through [[replace]], so `path` is never half-written.
     *
     * At 100 TB this full-rewrite form is the fallback; partition the
     * table (see [[writePartitioned]]) and rewrite ONLY the partitions
@@ -310,58 +309,84 @@ object IO {
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], orderCols: Seq[String] = Nil): Unit =
     withTableLock("upsert", path) {
-      upsertLocked(spark, path, updates, keys, orderCols)
+      replace(spark, path) { staged =>
+        upserted(spark, path, updates, keys, orderCols)
+          .write.mode("overwrite").parquet(staged)
+      }
     }
 
-  private def upsertLocked(spark: SparkSession, path: String, updates: DataFrame,
-      keys: Seq[String], orderCols: Seq[String]): Unit = {
+  /** The table at `path` with `updates` merged in ([[upsert]]'s
+    * semantics). Reads `path`, so it runs inside [[replace]]'s write. */
+  private def upserted(spark: SparkSession, path: String, updates: DataFrame,
+      keys: Seq[String], orderCols: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "upsert needs key columns")
-    healSwap(path) // the read below needs the healed table dir
     requireUnpartitioned("upsert", path)
     val existing = spark.read.parquet(path)
-    val merged =
-      if (orderCols.nonEmpty)
-        graft.ops.Relational.latestByKey(
-          existing.unionByName(updates), keys, orderCols)
-      else {
-        require(!existing.columns.contains("__gen") && !updates.columns.contains("__gen"),
-          "upsert reserves the column name __gen for its generation marker")
-        graft.ops.Relational.latestByKey(
-            existing.withColumn("__gen", lit(0))
-              .unionByName(updates.withColumn("__gen", lit(1))),
-            keys, Seq("__gen"))
-          .drop("__gen")
-      }
-    stagedSwap(path) { staged =>
-      merged.write.mode("overwrite").parquet(staged)
+    if (orderCols.nonEmpty)
+      graft.ops.Relational.latestByKey(
+        existing.unionByName(updates), keys, orderCols)
+    else {
+      require(!existing.columns.contains("__gen") && !updates.columns.contains("__gen"),
+        "upsert reserves the column name __gen for its generation marker")
+      graft.ops.Relational.latestByKey(
+          existing.withColumn("__gen", lit(0))
+            .unionByName(updates.withColumn("__gen", lit(1))),
+          keys, Seq("__gen"))
+        .drop("__gen")
     }
   }
 
-  /** Staged rewrite + swap, shared by [[upsert]] and [[compact]]. The
-    * staged copy is COMPLETE before the first rename, so `path` never
-    * holds a partial table. The two renames themselves are not one
-    * atomic step: a crash in that window leaves `path` absent with the
-    * finished `.staged` (or displaced `.old`) beside it — which the
-    * NEXT call self-heals before doing anything else, and which a human
-    * can heal with a single `mv`. Crash-stale `.staged`/`.old` garbage
-    * from older attempts is cleared up front, so a previous failure can
-    * never brick later rewrites.
+  /** The engine's one in-place directory rewrite, shared by the table
+    * writers here ([[upsert]], [[createOrUpsert]], [[scd2Merge]],
+    * [[compact]]) and the ANN store ([[graft.vector.IndexStore]]):
+    *  1. heal a crash of an earlier call: when `path` is missing, a
+    *     COMMITTED `<path>.staged` beside it (a crash between the two
+    *     renames of step 4) is promoted, else a `<path>.old` is put
+    *     back; stale `.staged`/`.old` copies are then deleted, so an old
+    *     failure can never brick later rewrites;
+    *  2. run `write` against the staged sibling. Everything that reads
+    *     `path` belongs inside `write`, after the heal: writing
+    *     `overwrite` straight into a directory the plan is scanning
+    *     would delete the input mid-read;
+    *  3. mark the staged directory committed once `write` returns, with
+    *     the `_SUCCESS` marker Spark's own commit leaves. A crash
+    *     mid-write leaves no marker, and step 1 clears such a copy
+    *     instead of promoting it;
+    *  4. swap it in (`path` → `.old`, `.staged` → `path`), or rename it
+    *     in when `path` does not exist;
+    *  5. delete the displaced copy.
+    *
+    * `path` never holds a partial directory. The two renames of step 4
+    * are not one atomic step: a crash between them leaves `path` absent
+    * with both complete copies beside it, which the next call's step 1
+    * (or one `mv` by hand) heals. Goes through Hadoop's `FileSystem`, so
+    * any filesystem with a real directory rename works; against an
+    * object store, swap a manifest pointer instead. It takes no lease:
+    * the table writers hold theirs around it ([[acquireTableLock]]).
     */
-  private def swapPaths(path: String) = {
-    val dir = java.nio.file.Paths.get(path)
-    (dir, dir.resolveSibling(dir.getFileName.toString + ".staged"),
-      dir.resolveSibling(dir.getFileName.toString + ".old"))
-  }
-
-  private def rmTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      // close the walk stream: a leaked directory fd per micro-batch
-      // (upsertSink → healSwap → here) eventually hits the ulimit
-      val w = java.nio.file.Files.walk(p)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally w.close()
+  private[graft] def replace(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = fs.makeQualified(new Path(path))
+    val staged = target.suffix(".staged")
+    val old = target.suffix(".old")
+    val marker = new Path(staged, "_SUCCESS")
+    // Hadoop's rename returns false instead of throwing, and renaming
+    // onto an existing directory nests the source inside it
+    def move(from: Path, to: Path): Unit =
+      require(!fs.exists(to) && fs.rename(from, to), s"rename $from -> $to failed")
+    if (!fs.exists(target)) {
+      if (fs.exists(marker)) move(staged, target)
+      else if (fs.exists(old)) move(old, target)
     }
+    fs.delete(staged, true); fs.delete(old, true)
+    write(staged.toString)
+    fs.create(marker, true).close()
+    if (fs.exists(target)) move(target, old)
+    move(staged, target)
+    fs.delete(old, true)
+  }
 
   /** A hive-partitioned layout (key=value subdirs) must not be rewritten
     * flat: partition discovery folds dir keys into data columns with
@@ -385,28 +410,6 @@ object IO {
     }
   }
 
-  /** A staged dir is promotable only if its write COMMITTED — Spark's
-    * `_SUCCESS` marker is the witness; a crash mid-write leaves
-    * `_temporary` and no marker. */
-  private def isCommitted(p: java.nio.file.Path): Boolean =
-    java.nio.file.Files.exists(p.resolve("_SUCCESS"))
-
-  /** Preflight for [[stagedSwap]] / [[createOrUpsert]]: self-heal a
-    * crash of a PRIOR attempt (table dir missing with a COMMITTED
-    * survivor beside it — a crash between the swap renames, or after a
-    * committed first create) and clear stale `.staged`/`.old` garbage,
-    * so an old failure can never brick later rewrites. Must run BEFORE
-    * the caller reads or existence-checks the table. */
-  private def healSwap(path: String): Unit = {
-    val (dir, staged, old) = swapPaths(path)
-    if (!java.nio.file.Files.exists(dir)) {
-      if (java.nio.file.Files.exists(staged) && isCommitted(staged))
-        java.nio.file.Files.move(staged, dir)
-      else if (java.nio.file.Files.exists(old)) java.nio.file.Files.move(old, dir)
-    }
-    rmTree(staged); rmTree(old)
-  }
-
   /** Cooperative single-writer lease for the rewrite ops. The unsafe
     * window is the WHOLE read→merge→swap, not just the two renames: two
     * upserts that both read the pre-merge table and then swap
@@ -419,7 +422,7 @@ object IO {
     * [[ConcurrentWriterException]] instead of corrupting the table. The
     * file records holder pid + timestamp for debuggability. A CRASHED
     * holder must not brick the table forever (the same self-healing
-    * discipline as [[healSwap]]): a lock older than `staleLockMs` is
+    * discipline as [[replace]]): a lock older than `staleLockMs` is
     * broken and re-raced — size that constant above the longest
     * expected rewrite (default 30 min covers a full-table rewrite at
     * the scales this flat-parquet form is for; beyond that, use a real
@@ -427,10 +430,10 @@ object IO {
     * without atomic create (S3) need an external lock service — this
     * lease encodes the SEMANTICS a Delta/Iceberg catalog provides.
     */
-  @volatile private[sources] var staleLockMs: Long = 30L * 60L * 1000L
+  private[sources] val staleLockMs: Long = 30L * 60L * 1000L
 
   private def lockFile(path: String): java.nio.file.Path = {
-    val (dir, _, _) = swapPaths(path)
+    val dir = java.nio.file.Paths.get(path)
     dir.resolveSibling(dir.getFileName.toString + ".lock")
   }
 
@@ -471,33 +474,21 @@ object IO {
     try body finally releaseTableLock(path)
   }
 
-  /** Callers must [[healSwap]] first (they all read or existence-check
-    * the table before writing, which itself needs the healed dir). */
-  private def stagedSwap(path: String)(write: String => Unit): Unit = {
-    val (dir, staged, old) = swapPaths(path)
-    write(staged.toString)
-    java.nio.file.Files.move(dir, old)
-    java.nio.file.Files.move(staged, dir)
-    rmTree(old)
-  }
-
   /** [[upsert]] when the table may not exist yet — the form a streaming
     * sink needs ([[graft.streaming.StreamingOps.upsertSink]]). The
-    * create is staged too (write beside, single rename in), so a crash
+    * create is staged too ([[replace]] renames it in), so a crash
     * mid-create leaves no half-table at `path` — an uncommitted staged
     * dir is cleared, not promoted, by the next call's heal. */
   def createOrUpsert(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], orderCols: Seq[String] = Nil): Unit =
     withTableLock("createOrUpsert", path) {
-      healSwap(path)
-      val (dir, staged, _) = swapPaths(path)
-      if (java.nio.file.Files.exists(dir))
-        upsertLocked(spark, path, updates, keys, orderCols)
-      else {
-        val initial = if (orderCols.isEmpty) updates
+      replace(spark, path) { staged =>
+        val table =
+          if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+            upserted(spark, path, updates, keys, orderCols)
+          else if (orderCols.isEmpty) updates
           else graft.ops.Relational.latestByKey(updates, keys, orderCols)
-        initial.write.mode("overwrite").parquet(staged.toString)
-        java.nio.file.Files.move(staged, dir)
+        table.write.mode("overwrite").parquet(staged)
       }
     }
 
@@ -532,28 +523,25 @@ object IO {
   def scd2Merge(spark: SparkSession, path: String, changes: DataFrame,
       keyCol: String, tsCol: String, attrCols: Seq[String]): Unit =
     withTableLock("scd2Merge", path) {
-      healSwap(path)
-      val (dir, staged, _) = swapPaths(path)
-      val changeRows = changes.select(
-        (keyCol +: tsCol +: attrCols).map(col): _*)
-      if (!java.nio.file.Files.exists(dir)) {
-        graft.ops.Temporal.scd2(changeRows, keyCol, tsCol, attrCols)
-          .write.mode("overwrite").parquet(staged.toString)
-        java.nio.file.Files.move(staged, dir)
-      } else {
-        requireUnpartitioned("scd2Merge", path)
-        val existing = spark.read.parquet(path)
-        val batchKeys = changeRows.select(col(keyCol)).distinct()
-        val affectedAsChanges = existing
-          .join(batchKeys, Seq(keyCol), "left_semi")
-          .select((col(keyCol) +: col("valid_from").as(tsCol) +:
-            attrCols.map(col)): _*)
-        val rebuilt = graft.ops.Temporal.scd2(
-          affectedAsChanges.unionByName(changeRows), keyCol, tsCol, attrCols)
-        val untouched = existing.join(batchKeys, Seq(keyCol), "left_anti")
-        stagedSwap(path) { s =>
-          untouched.unionByName(rebuilt).write.mode("overwrite").parquet(s)
-        }
+      replace(spark, path) { staged =>
+        val changeRows = changes.select(
+          (keyCol +: tsCol +: attrCols).map(col): _*)
+        val table =
+          if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+            graft.ops.Temporal.scd2(changeRows, keyCol, tsCol, attrCols)
+          else {
+            requireUnpartitioned("scd2Merge", path)
+            val existing = spark.read.parquet(path)
+            val batchKeys = changeRows.select(col(keyCol)).distinct()
+            val affectedAsChanges = existing
+              .join(batchKeys, Seq(keyCol), "left_semi")
+              .select((col(keyCol) +: col("valid_from").as(tsCol) +:
+                attrCols.map(col)): _*)
+            val rebuilt = graft.ops.Temporal.scd2(
+              affectedAsChanges.unionByName(changeRows), keyCol, tsCol, attrCols)
+            existing.join(batchKeys, Seq(keyCol), "left_anti").unionByName(rebuilt)
+          }
+        table.write.mode("overwrite").parquet(staged)
       }
     }
 
@@ -563,29 +551,24 @@ object IO {
     * file-listing + per-file open cost dominates scan time. Rewrites
     * `path` into ≈`targetFileMB`-sized files (computed from the actual
     * byte size, so the file count tracks data volume, not a guess),
-    * staged via a temp dir + atomic-ish swap so a crash mid-compaction
-    * never leaves `path` half-written.
+    * through [[replace]], so a crash mid-compaction never leaves `path`
+    * half-written.
     */
-  def compact(spark: SparkSession, path: String, targetFileMB: Int = 256): Unit =
-    withTableLock("compact", path) {
-      compactLocked(spark, path, targetFileMB)
-    }
-
-  private def compactLocked(spark: SparkSession, path: String, targetFileMB: Int): Unit = {
+  def compact(spark: SparkSession, path: String, targetFileMB: Int = 256): Unit = {
     require(targetFileMB > 0, s"targetFileMB must be positive, got $targetFileMB")
-    healSwap(path) // the size walk below needs the healed table dir
-    requireUnpartitioned("compact", path)
-    val dir = java.nio.file.Paths.get(path)
-    val walk = java.nio.file.Files.walk(dir)
-    val bytes =
-      try walk.filter(p =>
-        java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-        .mapToLong(p => java.nio.file.Files.size(p)).sum()
-      finally walk.close()
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / (targetFileMB * 1024L * 1024L)).toInt)
-    stagedSwap(path) { staged =>
-      spark.read.parquet(path).coalesce(nFiles)
-        .write.mode("overwrite").parquet(staged)
+    withTableLock("compact", path) {
+      replace(spark, path) { staged =>
+        requireUnpartitioned("compact", path)
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+        val bytes =
+          try walk.filter(p =>
+            java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+            .mapToLong(p => java.nio.file.Files.size(p)).sum()
+          finally walk.close()
+        val nFiles = math.max(1, math.ceil(bytes.toDouble / (targetFileMB * 1024L * 1024L)).toInt)
+        spark.read.parquet(path).coalesce(nFiles)
+          .write.mode("overwrite").parquet(staged)
+      }
     }
   }
 

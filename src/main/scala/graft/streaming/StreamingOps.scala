@@ -710,27 +710,47 @@ object StreamingOps {
         keyCol, tsCol, attrCols)
     }
 
-  /** The per-micro-batch body of [[lshIndexSink]], exposed so the
+  /** The per-micro-batch body of the three index sinks, exposed so the
     * exactly-once discipline is testable under an injected replay
     * (StreamingAnnIndexSpec re-fires a batchId and asserts the store is
-    * unchanged): band the batch at the store's FROZEN geometry
-    * ([[graft.vector.Similarity.lshSegment]] — provably equal to how a
-    * full rebuild would band these rows) and overwrite its
-    * deterministic `batch=<id>` segment directories. Idempotent by
-    * path: a crash-replayed batch rewrites the same dirs with the same
+    * unchanged): `segments` maps the batch to its rows per store subtree
+    * at the store's FROZEN geometry ([[lshSegments]], [[ivfSegments]],
+    * [[ivfPqSegments]] — pure per-row maps, provably equal to how a full
+    * rebuild would place these rows), and each overwrites its
+    * deterministic `<subtree>/batch=<id>` directory. Idempotent by path:
+    * a crash-replayed batch rewrites the same dirs with the same
     * content. */
-  private[streaming] def lshIndexBatch(
-      batch: DataFrame, batchId: Long, indexDir: String,
-      idCol: String, vecCol: String): Unit = {
-    val geom = graft.vector.IndexStore.readLshGeometry(
-      batch.sparkSession, indexDir)
+  private[streaming] def indexBatch(batch: DataFrame, batchId: Long, indexDir: String)(
+      segments: DataFrame => Seq[(String, DataFrame)]): Unit =
+    segments(batch).foreach { case (sub, rows) =>
+      rows.write.mode("overwrite").parquet(s"$indexDir/$sub/batch=$batchId")
+    }
+
+  /** An LSH batch banded at the store's geometry
+    * ([[graft.vector.Similarity.lshSegment]]). */
+  private[streaming] def lshSegments(indexDir: String, idCol: String, vecCol: String)(
+      batch: DataFrame): Seq[(String, DataFrame)] = {
     val (banded, vectors) = graft.vector.Similarity.lshSegment(
-      geom, batch, idCol, vecCol)
-    banded.write.mode("overwrite")
-      .parquet(s"$indexDir/banded/batch=$batchId")
-    vectors.write.mode("overwrite")
-      .parquet(s"$indexDir/vectors/batch=$batchId")
+      graft.vector.IndexStore.readLshGeometry(batch.sparkSession, indexDir),
+      batch, idCol, vecCol)
+    Seq("banded" -> banded, "vectors" -> vectors)
   }
+
+  /** An IVF batch assigned to the store's centroids
+    * ([[graft.vector.Similarity.ivfSegment]]). */
+  private[streaming] def ivfSegments(indexDir: String, idCol: String, vecCol: String)(
+      batch: DataFrame): Seq[(String, DataFrame)] =
+    Seq("data" -> graft.vector.Similarity.ivfSegment(
+      graft.vector.IndexStore.readIvfGeometry(batch.sparkSession, indexDir),
+      batch, idCol, vecCol))
+
+  /** An IVF-PQ batch assigned and encoded at the store's centroids and
+    * codebooks ([[graft.vector.Pq.ivfPqSegment]]). */
+  private[streaming] def ivfPqSegments(indexDir: String, idCol: String, vecCol: String)(
+      batch: DataFrame): Seq[(String, DataFrame)] =
+    Seq("data" -> graft.vector.Pq.ivfPqSegment(
+      graft.vector.IndexStore.readIvfPqGeometry(batch.sparkSession, indexDir),
+      batch, idCol, vecCol))
 
   /** Streaming LSH index maintenance (r9 VERDICT missing #3): grow a
     * durable [[graft.vector.IndexStore]] LSH store from a vector
@@ -763,28 +783,18 @@ object StreamingOps {
     * occupancy has drifted past ~2× target (corpus roughly doubled
     * since `p` was sized) — that re-sizes the geometry and collapses
     * segments as a side effect. Compact/rebuild from a maintenance
-    * process, not the sink itself: the sink's own writes stay
-    * per-batch idempotent either way (a replayed batch just recreates
-    * its segment beside the new base).
+    * process, not the sink itself, and between the sink's triggers: a
+    * compaction or rebuild that overlaps a batch can drop that batch's
+    * segment (the known limit in [[graft.vector.IndexStore]]). The
+    * sink's own writes stay per-batch idempotent either way (a replayed
+    * batch just recreates its segment beside the new base).
     */
   def lshIndexSink(
       df: DataFrame, indexDir: String, idCol: String, vecCol: String,
       name: String = "lsh_index_sink"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     foreachBatchSink(df, name) { (batch, bid) =>
-      lshIndexBatch(batch, bid, indexDir, idCol, vecCol)
+      indexBatch(batch, bid, indexDir)(lshSegments(indexDir, idCol, vecCol))
     }
-
-  /** The per-micro-batch body of [[ivfIndexSink]] — assign the batch to
-    * the store's FROZEN centroids and overwrite its `batch=<id>`
-    * segment. Same idempotence-by-path as [[lshIndexBatch]]. */
-  private[streaming] def ivfIndexBatch(
-      batch: DataFrame, batchId: Long, indexDir: String,
-      idCol: String, vecCol: String): Unit = {
-    val geom = graft.vector.IndexStore.readIvfGeometry(
-      batch.sparkSession, indexDir)
-    graft.vector.Similarity.ivfSegment(geom, batch, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$indexDir/data/batch=$batchId")
-  }
 
   /** Streaming IVF index maintenance — the [[lshIndexSink]] twin:
     * per-batch cell assignment against the store's frozen centroids
@@ -801,22 +811,8 @@ object StreamingOps {
       df: DataFrame, indexDir: String, idCol: String, vecCol: String,
       name: String = "ivf_index_sink"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     foreachBatchSink(df, name) { (batch, bid) =>
-      ivfIndexBatch(batch, bid, indexDir, idCol, vecCol)
+      indexBatch(batch, bid, indexDir)(ivfSegments(indexDir, idCol, vecCol))
     }
-
-  /** The per-micro-batch body of [[ivfPqIndexSink]] — assign + PQ-encode
-    * the batch at the store's FROZEN centroids and codebooks
-    * ([[graft.vector.Pq.ivfPqSegment]], a pure per-row map) and
-    * overwrite its `batch=<id>` segment. Same idempotence-by-path as
-    * [[lshIndexBatch]]. */
-  private[streaming] def ivfPqIndexBatch(
-      batch: DataFrame, batchId: Long, indexDir: String,
-      idCol: String, vecCol: String): Unit = {
-    val geom = graft.vector.IndexStore.readIvfPqGeometry(
-      batch.sparkSession, indexDir)
-    graft.vector.Pq.ivfPqSegment(geom, batch, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$indexDir/data/batch=$batchId")
-  }
 
   /** Streaming IVF-PQ index maintenance (r11) — the [[ivfIndexSink]]
     * twin at the CODED grain: each micro-batch's vectors are assigned
@@ -838,6 +834,6 @@ object StreamingOps {
       df: DataFrame, indexDir: String, idCol: String, vecCol: String,
       name: String = "ivfpq_index_sink"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     foreachBatchSink(df, name) { (batch, bid) =>
-      ivfPqIndexBatch(batch, bid, indexDir, idCol, vecCol)
+      indexBatch(batch, bid, indexDir)(ivfPqSegments(indexDir, idCol, vecCol))
     }
 }

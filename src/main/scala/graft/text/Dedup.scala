@@ -60,17 +60,16 @@ object Dedup {
     exact(fresh, keys, idCol, keep)
   }
 
-  /** Exact-duplicate class tagging — the collapse step every
-    * pair-quadratic operator should run FIRST: each row gains its
-    * text-identity class (`clsCol` = min id among rows with
-    * byte-identical `textCol`) and the class multiplicity (`mCol`).
-    * One text-keyed shuffle (the same work as exact dedup), after
-    * which any pairwise machinery can run on ONE representative per
-    * class and recover per-doc pair counts by multiplicity
-    * combinatorics: within a class every pair qualifies trivially
-    * (identical text ⇒ similarity 1), C(m,2) pairs; across classes
-    * the similarity of any member pair equals the representatives'
-    * (it depends only on the texts), m₁·m₂ pairs.
+  /** Exact-duplicate classes — the collapse step every pair-quadratic
+    * operator should run FIRST: one row per distinct text with
+    * (`textCol`, `clsCol` = min id among rows with byte-identical
+    * `textCol`, `mCol` = class multiplicity). Any pairwise machinery
+    * can then run on ONE representative per class and recover
+    * per-doc pair counts by multiplicity combinatorics: within a class
+    * every pair qualifies trivially (identical text ⇒ similarity 1),
+    * C(m,2) pairs; across classes the similarity of any member pair
+    * equals the representatives' (it depends only on the texts),
+    * m₁·m₂ pairs.
     *
     * Why this is THE scale lever for near-dup analytics: real corpora
     * (and the amplified stress corpus, which is 99-exact-twins by
@@ -79,19 +78,10 @@ object Dedup {
     * SQUARE of the duplication factor while the distinct-text workload
     * is unchanged. Collapsing first makes the quadratic stage's cost
     * track distinct content, not raw row count.
-    */
-  def withExactClasses(df: DataFrame, idCol: String, textCol: String,
-      clsCol: String = "__cls", mCol: String = "__m"): DataFrame = {
-    val w = Window.partitionBy(col(textCol))
-    df.withColumn(clsCol, min(col(idCol)).over(w))
-      .withColumn(mCol, count(lit(1)).over(w))
-  }
-
-  /** CLASS-grain exact-duplicate frame — the r11 one-pass form of
-    * [[withExactClasses]] for consumers that never need the member
-    * grain: one row per distinct text with (`textCol`, `clsCol` = min
-    * id, `mCol` = multiplicity), built by a text-keyed AGGREGATE
-    * instead of a text-partitioned window. Two reasons it wins at
+    *
+    * Built by a text-keyed AGGREGATE, not the text-partitioned window
+    * the r7–r10 operators used (that member-grain form survives as the
+    * reference in CollapseEquivalenceSpec). Two reasons it wins at
     * scale (guide §2.4/§5):
     *  - an aggregate hash-folds in one pass where the window pays a
     *    per-partition SORT of the full corpus;

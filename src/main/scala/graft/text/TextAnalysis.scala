@@ -151,7 +151,7 @@ object TextAnalysis {
     * Shape: postings build = one (doc,term) aggregate; idf is
     * vocab-sized (broadcast); the pair sum shuffles postings once on
     * the term. Cost is Σ_t df(t)² over DISTINCT texts — exact
-    * duplicates are collapsed first ([[Dedup.withExactClasses]],
+    * duplicates are collapsed first ([[Dedup.exactClassAgg]],
     * round-7): tf and norms are text-functional, so the postings
     * self-join runs over one representative per class (df/idf still
     * count every document via the class multiplicity), and the final

@@ -25,7 +25,8 @@ object Plans {
 
   /** `show` of query `name`'s plan, taken inside a plan-only
     * [[graft.CacheScope]]: building the query runs no eager counts, and
-    * nothing it caches outlives the call. */
+    * nothing it caches outlives the call. Checkpoint sites still run
+    * the upstream they truncate (see [[graft.CacheScope]]). */
   def planOf[A](spark: SparkSession, dir: String, name: String)(
       show: org.apache.spark.sql.execution.QueryExecution => A): A =
     graft.CacheScope.planOnly(show(SparkEntry.queries(name)(spark, dir).queryExecution))

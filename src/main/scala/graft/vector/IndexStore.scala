@@ -1,5 +1,6 @@
 package graft.vector
 
+import graft.sources.IO
 import graft.vector.Pq.{IvfPqIndex, PqModel}
 import graft.vector.Similarity.{IvfIndex, LshIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -38,19 +39,43 @@ import org.apache.spark.sql.functions._
   * prescribe: [[compactLsh]]/[[compactIvf]] (pure segment merge, ~64
   * segments) and [[rebuildLsh]]/[[rebuildIvf]] (geometry re-size /
   * centroid retrain when the append scaladoc's drift thresholds fire).
+  *
+  * Every rewrite of the store goes through [[graft.sources.IO.replace]],
+  * the engine's one staged swap. [[writeLsh]]/[[writeIvf]]/[[writeIvfPq]]
+  * and the rebuilds replace the whole of `dir`: header, centroids,
+  * codebooks and base segment are written together into the staged
+  * copy, so no segment of an earlier index survives. Compaction
+  * replaces each segment subtree. No directory a reader lists is ever
+  * half-written. After a crash at any step, the directory being
+  * replaced or a complete copy beside it holds a whole store, and the
+  * next call that replaces the same directory heals it before it
+  * reads anything: `write*`/`rebuild*`
+  * for the store, `compact*` for a segment subtree. Sinks add
+  * segments without a swap: each is a fresh `batch=<id>` directory,
+  * and a replay overwrites it.
+  *
+  * Known limit: a compaction or rebuild that runs while a sink is live
+  * can delete a segment the sink committed after the maintenance step
+  * read the store, because the swap installs what was read. Run
+  * maintenance between sink triggers or with the sink stopped; a
+  * versioned manifest would lift this.
   */
 object IndexStore {
 
   /** Write a full [[LshIndex]] as the base segment (batch=-1) plus its
-    * probe geometry. Overwrites any store at `dir`. */
-  def writeLsh(index: LshIndex, dir: String): Unit = {
+    * probe geometry. Replaces any store at `dir`, appended segments
+    * included. */
+  def writeLsh(index: LshIndex, dir: String): Unit =
+    IO.replace(index.banded.sparkSession, dir)(lshFiles(index, _))
+
+  private def lshFiles(index: LshIndex, root: String): Unit = {
     val spark = index.banded.sparkSession
     import spark.implicits._
     Seq((index.dim, index.p, index.L, index.seed))
       .toDF("dim", "p", "L", "seed")
-      .write.mode("overwrite").parquet(s"$dir/geometry")
-    index.banded.write.mode("overwrite").parquet(s"$dir/banded/batch=-1")
-    index.vectors.write.mode("overwrite").parquet(s"$dir/vectors/batch=-1")
+      .write.mode("overwrite").parquet(s"$root/geometry")
+    index.banded.write.mode("overwrite").parquet(s"$root/banded/batch=-1")
+    index.vectors.write.mode("overwrite").parquet(s"$root/vectors/batch=-1")
   }
 
   /** Load the geometry header only — what a sink needs to band new
@@ -74,28 +99,36 @@ object IndexStore {
         .select(col("id"), col("v")))
   }
 
-  /** Write a full [[IvfIndex]] as the base segment plus centroids. */
-  def writeIvf(index: IvfIndex, dir: String): Unit = {
+  /** Write a full [[IvfIndex]] as the base segment plus centroids.
+    * Replaces any store at `dir`, appended segments included. */
+  def writeIvf(index: IvfIndex, dir: String): Unit =
+    IO.replace(index.data.sparkSession, dir)(ivfFiles(index, _))
+
+  private def ivfFiles(index: IvfIndex, root: String): Unit = {
     val spark = index.data.sparkSession
     import spark.implicits._
     Seq(index.dim).toDF("dim")
-      .write.mode("overwrite").parquet(s"$dir/geometry")
-    index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c) }
-      .toDF("cell", "c")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    index.data.write.mode("overwrite").parquet(s"$dir/data/batch=-1")
+      .write.mode("overwrite").parquet(s"$root/geometry")
+    centroidFrame(spark, index.centroids).write.mode("overwrite").parquet(s"$root/centroids")
+    index.data.write.mode("overwrite").parquet(s"$root/data/batch=-1")
+  }
+
+  private def centroidFrame(spark: SparkSession, centroids: IndexedSeq[Seq[Double]]): DataFrame = {
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "c")
   }
 
   /** Load the frozen centroids + dim — what a sink needs to assign new
     * segments. `data` is left null (the sink never reads it). */
   def readIvfGeometry(spark: SparkSession, dir: String): IvfIndex = {
     val dim = spark.read.parquet(s"$dir/geometry").head().getAs[Int]("dim")
-    val cents = spark.read.parquet(s"$dir/centroids")
+    IvfIndex(data = null, centroids = readCentroids(spark, dir), dim = dim)
+  }
+
+  private def readCentroids(spark: SparkSession, dir: String): IndexedSeq[Seq[Double]] =
+    spark.read.parquet(s"$dir/centroids")
       .orderBy(col("cell")).collect()
       .map(r => r.getSeq[Double](1).toArray.toSeq).toIndexedSeq
-    IvfIndex(data = null, centroids = cents, dim = dim)
-  }
 
   /** Load the whole store as a servable [[IvfIndex]]. */
   def readIvf(spark: SparkSession, dir: String): IvfIndex = {
@@ -105,25 +138,26 @@ object IndexStore {
   }
 
   /** Write a full [[Pq.IvfPqIndex]] as base segment + centroids +
-    * codebooks (r11). The data tree holds only `(id, cell, codes,
-    * rnorm)` — no float vectors, which is the point of the PQ store:
-    * at 100 TB of embeddings this is the index that still fits. The
-    * float table stays at rest in the lake; [[rebuildIvfPq]] and the
-    * rerank stage read it from there. */
-  def writeIvfPq(index: IvfPqIndex, dir: String): Unit = {
+    * codebooks (r11), replacing any store at `dir`. The data tree holds
+    * only `(id, cell, codes, rnorm)` — no float vectors, which is the
+    * point of the PQ store: at 100 TB of embeddings this is the index
+    * that still fits. The float table stays at rest in the lake;
+    * [[rebuildIvfPq]] and the rerank stage read it from there. */
+  def writeIvfPq(index: IvfPqIndex, dir: String): Unit =
+    IO.replace(index.data.sparkSession, dir)(ivfPqFiles(index, _))
+
+  private def ivfPqFiles(index: IvfPqIndex, root: String): Unit = {
     val spark = index.data.sparkSession
     import spark.implicits._
     Seq((index.dim, index.model.m, index.model.ksub)).toDF("dim", "m", "ksub")
-      .write.mode("overwrite").parquet(s"$dir/geometry")
-    index.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "c")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+      .write.mode("overwrite").parquet(s"$root/geometry")
+    centroidFrame(spark, index.centroids).write.mode("overwrite").parquet(s"$root/centroids")
     index.model.books.zipWithIndex
       .flatMap { case (book, j) => book.zipWithIndex.map { case (cw, k) =>
         (j, k, cw) } }
       .toDF("sub", "code", "cw")
-      .write.mode("overwrite").parquet(s"$dir/books")
-    index.data.write.mode("overwrite").parquet(s"$dir/data/batch=-1")
+      .write.mode("overwrite").parquet(s"$root/books")
+    index.data.write.mode("overwrite").parquet(s"$root/data/batch=-1")
   }
 
   /** Load frozen centroids + codebooks — what a sink/probe needs to
@@ -133,9 +167,6 @@ object IndexStore {
     val g = spark.read.parquet(s"$dir/geometry").head()
     val (dim, m, ksub) =
       (g.getAs[Int]("dim"), g.getAs[Int]("m"), g.getAs[Int]("ksub"))
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(r => r.getSeq[Double](1).toArray.toSeq).toIndexedSeq
     val bookRows = spark.read.parquet(s"$dir/books")
       .orderBy(col("sub"), col("code")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray.toSeq))
@@ -145,7 +176,7 @@ object IndexStore {
     require(model.ksub == ksub && model.dim == dim,
       s"stored geometry ($dim, $m, $ksub) disagrees with books " +
         s"(${model.dim}, ${model.m}, ${model.ksub}) at $dir")
-    IvfPqIndex(data = null, centroids = cents, model = model, dim = dim)
+    IvfPqIndex(data = null, centroids = readCentroids(spark, dir), model = model, dim = dim)
   }
 
   /** Load the whole store as a servable [[Pq.IvfPqIndex]]. */
@@ -153,42 +184,6 @@ object IndexStore {
     val geom = readIvfPqGeometry(spark, dir)
     geom.copy(data = spark.read.parquet(s"$dir/data")
       .select(col("id"), col("cell"), col("codes"), col("rnorm")))
-  }
-
-  /** Compact an IVF-PQ store: merge the coded-data segments into one
-    * `batch=-1` base. Centroids and codebooks untouched — the
-    * [[compactIvf]] twin at the coded grain. */
-  def compactIvfPq(
-      spark: SparkSession, dir: String, targetPartitions: Int = 0): Unit =
-    compactTree(spark, s"$dir/data", targetPartitions)
-
-  /** The rebuild half of the IVF-PQ cadence: retrain BOTH quantizers
-    * (coarse centroids + per-subspace codebooks) and re-encode. Unlike
-    * [[rebuildIvf]], the store itself holds no float vectors, so the
-    * caller passes the at-rest float table — the same one the rerank
-    * stage reads. The id alignment contract is the caller's: pass the
-    * corpus whose rows the stream landed (encode is a pure per-row map,
-    * so a superset simply widens the index). */
-  def rebuildIvfPq(
-      spark: SparkSession, dir: String,
-      vectors: DataFrame, idCol: String, vecCol: String,
-      numCells: Int = 64, m: Int = 8, ksub: Int = 64,
-      lloydIters: Int = 2, trainFraction: Double = 1.0): IvfPqIndex = {
-    val idx = Pq.ivfPqIndex(vectors, idCol, vecCol,
-      numCells, m, ksub, lloydIters, trainFraction)
-    stageAndSwap(spark, dir, Seq("data" -> idx.data))
-    import spark.implicits._
-    Seq((idx.dim, idx.model.m, idx.model.ksub)).toDF("dim", "m", "ksub")
-      .write.mode("overwrite").parquet(s"$dir/geometry")
-    idx.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "c")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    idx.model.books.zipWithIndex
-      .flatMap { case (book, j) => book.zipWithIndex.map { case (cw, k) =>
-        (j, k, cw) } }
-      .toDF("sub", "code", "cw")
-      .write.mode("overwrite").parquet(s"$dir/books")
-    idx
   }
 
   /** Segments currently in a store subtree (`banded`/`vectors`/`data`)
@@ -207,42 +202,23 @@ object IndexStore {
   }
 
   /** Rewrite every `batch=*` segment of one subtree into a single new
-    * base segment (`batch=-1`), staged beside the live tree and swapped
-    * in by rename — the read path (plain partition discovery) sees
-    * either the old segment set or the compacted base, never a partial
-    * mix. Row content is untouched (pure segment merge), so probes are
+    * base segment (`batch=-1`) through [[graft.sources.IO.replace]].
+    * Row content is untouched (pure segment merge), so probes are
     * provably oblivious: reading `dir/<sub>` yields the same multiset
     * of rows before and after (pinned in IndexStoreCompactionSpec).
-    *
-    * Crash story: the stage write is invisible until the first rename;
-    * a crash between the two renames leaves `<sub>.old` + `<sub>.compact`
-    * — both complete copies — and re-running compaction (or restoring
-    * `.old`) recovers. At cluster scale against an object store you'd
-    * swap a manifest pointer instead of renaming; the segment layout
-    * itself is unchanged.
     *
     * `targetPartitions` > 0 coalesces the merged scan so the compacted
     * base lands in that many files (compaction exists to REDUCE file
     * count; the default keeps the scan's natural partitioning, which at
     * many-tiny-segments counts is already ≤ one file per segment). */
-  private def compactTree(
-      spark: SparkSession, root: String, targetPartitions: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    require(fs.exists(p(root)), s"no store subtree at $root")
-    val merged0 = spark.read.parquet(root)
-      .drop("batch") // discovery column; segment identity dies here
-    val merged =
-      if (targetPartitions > 0) merged0.coalesce(targetPartitions)
-      else merged0
-    fs.delete(p(s"$root.compact"), true)
-    merged.write.mode("overwrite").parquet(s"$root.compact/batch=-1")
-    fs.delete(p(s"$root.old"), true)
-    require(fs.rename(p(root), p(s"$root.old")), s"swap-out failed: $root")
-    require(fs.rename(p(s"$root.compact"), p(root)), s"swap-in failed: $root")
-    fs.delete(p(s"$root.old"), true)
-  }
+  private def mergeSegments(
+      spark: SparkSession, root: String, targetPartitions: Int): Unit =
+    IO.replace(spark, root) { staged =>
+      val merged = spark.read.parquet(root)
+        .drop("batch") // discovery column; segment identity dies here
+      (if (targetPartitions > 0) merged.coalesce(targetPartitions) else merged)
+        .write.mode("overwrite").parquet(s"$staged/batch=-1")
+    }
 
   /** Compact an LSH store: merge all postings segments and all vector
     * segments into single `batch=-1` bases. Geometry is untouched —
@@ -252,8 +228,8 @@ object IndexStore {
     * instead, which re-sizes the geometry. */
   def compactLsh(
       spark: SparkSession, dir: String, targetPartitions: Int = 0): Unit = {
-    compactTree(spark, s"$dir/banded", targetPartitions)
-    compactTree(spark, s"$dir/vectors", targetPartitions)
+    mergeSegments(spark, s"$dir/banded", targetPartitions)
+    mergeSegments(spark, s"$dir/vectors", targetPartitions)
   }
 
   /** Compact an IVF store: merge all assigned-data segments into a
@@ -263,75 +239,67 @@ object IndexStore {
     * [[rebuildIvf]], which retrains. */
   def compactIvf(
       spark: SparkSession, dir: String, targetPartitions: Int = 0): Unit =
-    compactTree(spark, s"$dir/data", targetPartitions)
+    mergeSegments(spark, s"$dir/data", targetPartitions)
+
+  /** Compact an IVF-PQ store: merge the coded-data segments into one
+    * `batch=-1` base. Centroids and codebooks untouched — the
+    * [[compactIvf]] twin at the coded grain. */
+  def compactIvfPq(
+      spark: SparkSession, dir: String, targetPartitions: Int = 0): Unit =
+    mergeSegments(spark, s"$dir/data", targetPartitions)
 
   /** The rebuild half of the LSH cadence: re-band the full stored
     * corpus at a FRESH auto-sized geometry (p re-sized to the corpus as
     * it is now — the thing [[Similarity.lshIndexAppend]] freezes) and
-    * swap the store to it. One linear scan of the vectors tree + the
-    * banding map; segments collapse to `batch=-1` as a side effect.
+    * replace the store with it, the [[writeLsh]] write. One linear scan
+    * of the vectors tree + the banding map; segments collapse to
+    * `batch=-1` as a side effect. Returns the store as rebuilt.
     * In-flight readers that loaded the OLD geometry must re-read it —
     * codes from different seeds/p do not mix (same contract as any
     * index rebuild). */
   def rebuildLsh(
       spark: SparkSession, dir: String, L: Int = 32,
       bucketTarget: Int = 128, seed: Long = 42L): LshIndex = {
-    val vectors = spark.read.parquet(s"$dir/vectors")
-      .select(col("id"), col("v"))
-    val idx = Similarity.lshIndex(vectors, "id", "v",
-      L = L, bucketTarget = bucketTarget, seed = seed)
-    stageAndSwap(spark, dir, Seq(
-      "banded" -> idx.banded, "vectors" -> idx.vectors))
-    import spark.implicits._
-    Seq((idx.dim, idx.p, idx.L, idx.seed)).toDF("dim", "p", "L", "seed")
-      .write.mode("overwrite").parquet(s"$dir/geometry")
-    idx
+    IO.replace(spark, dir) { staged =>
+      val vectors = spark.read.parquet(s"$dir/vectors")
+        .select(col("id"), col("v"))
+      lshFiles(Similarity.lshIndex(vectors, "id", "v",
+        L = L, bucketTarget = bucketTarget, seed = seed), staged)
+    }
+    readLsh(spark, dir)
   }
 
   /** The rebuild half of the IVF cadence: retrain centroids over the
     * full stored corpus (Lloyd, same deterministic seeding as
-    * [[Similarity.ivfIndex]]), re-assign every vector, swap the store.
-    * This is what the append scaladoc's "retrain when drifted" points
-    * at. */
+    * [[Similarity.ivfIndex]]), re-assign every vector and replace the
+    * store with the result, the [[writeIvf]] write. This is what the
+    * append scaladoc's "retrain when drifted" points at. Returns the
+    * store as rebuilt. */
   def rebuildIvf(
       spark: SparkSession, dir: String, numCells: Int = 64,
-      lloydIters: Int = 2, trainFraction: Double = 1.0): IvfIndex = {
-    val data = spark.read.parquet(s"$dir/data").select(col("id"), col("v"))
-    val idx = Similarity.ivfIndex(data, "id", "v",
-      numCells, lloydIters, trainFraction)
-    stageAndSwap(spark, dir, Seq("data" -> idx.data))
-    import spark.implicits._
-    Seq(idx.dim).toDF("dim")
-      .write.mode("overwrite").parquet(s"$dir/geometry")
-    idx.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "c")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    idx
+      lloydIters: Int = 2): IvfIndex = {
+    IO.replace(spark, dir) { staged =>
+      val data = spark.read.parquet(s"$dir/data").select(col("id"), col("v"))
+      ivfFiles(Similarity.ivfIndex(data, "id", "v", numCells, lloydIters), staged)
+    }
+    readIvf(spark, dir)
   }
 
-  /** Write each frame (whose lineage READS the live tree) to a staged
-    * `<sub>.compact/batch=-1`, then swap all subtrees — the rebuild
-    * twin of [[compactTree]]'s stage-then-rename discipline (writing
-    * `overwrite` straight into a directory the plan is scanning would
-    * delete the input mid-read). Geometry/centroids are driver-side
-    * values by the time the caller overwrites them, so those writes
-    * need no staging. */
-  private def stageAndSwap(
+  /** The rebuild half of the IVF-PQ cadence: retrain BOTH quantizers
+    * (coarse centroids + per-subspace codebooks), re-encode, and
+    * replace the store, the [[writeIvfPq]] write. Unlike [[rebuildIvf]],
+    * the store itself holds no float vectors, so the caller passes the
+    * at-rest float table — the same one the rerank stage reads. The id
+    * alignment contract is the caller's: pass the corpus whose rows the
+    * stream landed (encode is a pure per-row map, so a superset simply
+    * widens the index). Returns the store as rebuilt. */
+  def rebuildIvfPq(
       spark: SparkSession, dir: String,
-      subs: Seq[(String, DataFrame)]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    subs.foreach { case (sub, df) =>
-      fs.delete(p(s"$dir/$sub.compact"), true)
-      df.write.mode("overwrite").parquet(s"$dir/$sub.compact/batch=-1")
-    }
-    subs.foreach { case (sub, _) =>
-      val root = s"$dir/$sub"
-      fs.delete(p(s"$root.old"), true)
-      require(fs.rename(p(root), p(s"$root.old")), s"swap-out failed: $root")
-      require(fs.rename(p(s"$root.compact"), p(root)), s"swap-in failed: $root")
-      fs.delete(p(s"$root.old"), true)
-    }
+      vectors: DataFrame, idCol: String, vecCol: String,
+      numCells: Int = 64, m: Int = 8, ksub: Int = 64,
+      lloydIters: Int = 2): IvfPqIndex = {
+    IO.replace(spark, dir)(ivfPqFiles(
+      Pq.ivfPqIndex(vectors, idCol, vecCol, numCells, m, ksub, lloydIters), _))
+    readIvfPq(spark, dir)
   }
 }

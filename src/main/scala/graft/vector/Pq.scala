@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   * corpus with genuine cluster structure ADC alone ranks well and the
   * rerank narrows to a cheap confirmation. Training is per-subspace
   * Lloyd with the [[Similarity.trainCentroids]] determinism rules:
-  * smallest-xxhash64 seeding, deterministic sample, empty codes keep
+  * smallest-xxhash64 seeding over the whole corpus, empty codes keep
   * their previous codeword.
   */
 object Pq {
@@ -76,8 +76,8 @@ object Pq {
     })
   }
 
-  /** Train PQ codebooks: per-subspace k-means over a deterministic
-    * corpus sample. One [[graft.functions.expressions.PqEncode]] pass +
+  /** Train PQ codebooks: per-subspace k-means over the whole corpus.
+    * One [[graft.functions.expressions.PqEncode]] pass +
     * one posexplode aggregate per Lloyd iteration covers ALL m
     * subspaces (the aggregate's result is m·ksub·dsub rows —
     * driver-small at any corpus size). May return fewer than `ksub`
@@ -85,29 +85,24 @@ object Pq {
     * [[Similarity.trainCentroids]] rule). */
   def pqTrain(
       corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int = 8, ksub: Int = 64, lloydIters: Int = 2,
-      trainFraction: Double = 1.0): PqModel = {
+      m: Int = 8, ksub: Int = 64, lloydIters: Int = 2): PqModel = {
     GraftFunctions.register(corpus.sparkSession)
     val dim = Similarity.vecDim(corpus, vecCol)
     require(m >= 1 && dim % m == 0, s"dim $dim must be divisible by m=$m")
     val base = corpus.select(
       col(idCol).as("id"),
       Similarity.requireDim(asDouble(col(vecCol)), dim).as("v"))
-    pqTrainOnBase(base, m, ksub, lloydIters, trainFraction)
+    pqTrainOnBase(base, m, ksub, lloydIters)
   }
 
   /** [[pqTrain]] over an already-projected, dim-guarded `(id, v)` base. */
   private[vector] def pqTrainOnBase(
       base: DataFrame, m: Int, ksub: Int,
-      lloydIters: Int, trainFraction: Double): PqModel = {
-    val train = if (trainFraction >= 1.0) base
-      else base.filter(pmod(xxhash64(col("id").cast("string")), lit(1000000L))
-        < lit((trainFraction * 1000000).toLong))
-
+      lloydIters: Int): PqModel = {
     // init: the ksub smallest-xxhash64 rows seed ALL subspaces (each
     // row sliced into its m subvectors) — deterministic, replayable
     val seedRows: Array[Seq[Double]] =
-      train.orderBy(xxhash64(col("id").cast("string")), col("id"))
+      base.orderBy(xxhash64(col("id").cast("string")), col("id"))
         .limit(ksub).select(col("v")).collect().map(_.getSeq[Double](0))
     require(seedRows.nonEmpty, "corpus too small to seed PQ codebooks")
     val dsub = seedRows(0).length / m
@@ -118,7 +113,7 @@ object Pq {
       // codes projected in their OWN select BELOW the generator — a
       // non-generator expression beside posexplode re-evaluates per
       // exploded ELEMENT (the r9 Lloyd trap, see trainOnBase)
-      val means = train
+      val means = base
         .select(GraftFunctions.pqEncode(col("v"), model.booksLit).as("codes"),
           col("v"))
         .select(col("codes"), posexplode(col("v")).as(Seq("pos", "x")))
@@ -239,20 +234,20 @@ object Pq {
 
   /** Build an [[IvfPqIndex]]: IVF centroids (max-cosine Lloyd,
     * [[Similarity.trainCentroids]]) + PQ codebooks ([[pqTrain]]) over
-    * the same deterministic sample, then one pass assigning + encoding
+    * the same corpus, then one pass assigning + encoding
     * every vector. */
   def ivfPqIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       numCells: Int = 64, m: Int = 8, ksub: Int = 64,
-      lloydIters: Int = 2, trainFraction: Double = 1.0): IvfPqIndex = {
+      lloydIters: Int = 2): IvfPqIndex = {
     GraftFunctions.register(corpus.sparkSession)
     val dim = Similarity.vecDim(corpus, vecCol)
     require(m >= 1 && dim % m == 0, s"dim $dim must be divisible by m=$m")
     val base = corpus.select(
       col(idCol).as("id"),
       Similarity.requireDim(asDouble(col(vecCol)), dim).as("v"))
-    val centroids = Similarity.trainOnBase(base, numCells, lloydIters, trainFraction)
-    val model = pqTrainOnBase(base, m, ksub, lloydIters, trainFraction)
+    val centroids = Similarity.trainOnBase(base, numCells, lloydIters)
+    val model = pqTrainOnBase(base, m, ksub, lloydIters)
     val data = base
       .select(col("id"),
         Similarity.cellAssignment(col("v"), centroids).as("cell"),

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * corpora; the Spark shape here is:
   *
   *  1. CLUSTER: Lloyd-trained centroids ([[Similarity.trainCentroids]] —
-  *     deterministic init/sample), assignment as a literal-broadcast
+  *     deterministic init), assignment as a literal-broadcast
   *     codegen'd map ([[Similarity.cellAssignment]]).
   *  2. PAIR: cosine over same-cell pairs only — the cell equi-join is
   *     one keyed shuffle, and the quadratic term drops from n² to
@@ -39,8 +39,7 @@ object SemanticDedup {
     */
   def semanticPairs(
       df: DataFrame, idCol: String, vecCol: String, tau: Double,
-      numCells: Int = 64, lloydIters: Int = 2,
-      trainFraction: Double = 1.0): DataFrame = {
+      numCells: Int = 64, lloydIters: Int = 2): DataFrame = {
     require(tau >= -1.0 && tau <= 1.0, s"tau must be a cosine in [-1,1]: $tau")
     GraftFunctions.register(df.sparkSession)
     // empty corpus → empty pair set (dedup of nothing is nothing), not a
@@ -55,7 +54,7 @@ object SemanticDedup {
     val dim = dimOpt.get
     val projected = df.select(col(idCol).as("id"),
       Similarity.requireDim(asDouble(col(vecCol)), dim).as("v"))
-    val centroids = Similarity.trainOnBase(projected, numCells, lloydIters, trainFraction)
+    val centroids = Similarity.trainOnBase(projected, numCells, lloydIters)
     pairsWithin(projected, tau, centroids)
   }
 
@@ -112,9 +111,8 @@ object SemanticDedup {
   def dedup(
       df: DataFrame, idCol: String, vecCol: String, tau: Double,
       numCells: Int = 64, lloydIters: Int = 2,
-      trainFraction: Double = 1.0,
       checkpointDir: Option[String] = None): DataFrame = {
-    val pairs = semanticPairs(df, idCol, vecCol, tau, numCells, lloydIters, trainFraction)
+    val pairs = semanticPairs(df, idCol, vecCol, tau, numCells, lloydIters)
       .select(col("id_a"), col("id_b"))
     val cc = Dedup.connectedComponents(pairs, "id_a", "id_b",
       checkpointDir = checkpointDir)

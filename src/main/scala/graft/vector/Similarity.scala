@@ -314,22 +314,22 @@ object Similarity {
         lit(i).as("cell"))
     }: _*).getField("cell")
 
-  /** Lloyd-trained centroids over a deterministic corpus sample:
+  /** Lloyd-trained centroids over the whole corpus:
     * init = smallest-xxhash64 ids (retries replay identically), then
     * `lloydIters` rounds of element-wise mean per max-cosine cell. Each
     * round is one aggregate whose result (numCells × dim rows) is
     * driver-small at any corpus size; empty cells keep their previous
     * centroid. May return FEWER than `numCells` centroids on a tiny
-    * corpus/sample — callers clamp to the actual count.
+    * corpus — callers clamp to the actual count.
     */
   def trainCentroids(
       corpus: DataFrame, idCol: String, vecCol: String, numCells: Int,
-      lloydIters: Int = 2, trainFraction: Double = 1.0): IndexedSeq[Seq[Double]] = {
+      lloydIters: Int = 2): IndexedSeq[Seq[Double]] = {
     GraftFunctions.register(corpus.sparkSession)
     val dim = vecDim(corpus, vecCol)
     val base = corpus.select(
       col(idCol).as("id"), requireDim(asDouble(col(vecCol)), dim).as("v"))
-    trainOnBase(base, numCells, lloydIters, trainFraction)
+    trainOnBase(base, numCells, lloydIters)
   }
 
   /** Lloyd training over an ALREADY-projected `(id, v)` base — shared by
@@ -338,14 +338,9 @@ object Similarity {
     * job and the projection a second time. */
   private[vector] def trainOnBase(
       base: DataFrame, numCells: Int,
-      lloydIters: Int, trainFraction: Double): IndexedSeq[Seq[Double]] = {
-    // deterministic subsample for training (xxhash64 of id, not rand())
-    val train = if (trainFraction >= 1.0) base
-      else base.filter(pmod(xxhash64(col("id").cast("string")), lit(1000000L))
-        < lit((trainFraction * 1000000).toLong))
-
+      lloydIters: Int): IndexedSeq[Seq[Double]] = {
     var centroids: IndexedSeq[Seq[Double]] =
-      train.orderBy(xxhash64(col("id").cast("string")), col("id"))
+      base.orderBy(xxhash64(col("id").cast("string")), col("id"))
         .limit(numCells).select(col("v")).collect().map(_.getSeq[Double](0)).toIndexedSeq
     require(centroids.nonEmpty, "corpus too small to seed centroids")
 
@@ -358,7 +353,7 @@ object Similarity {
       // per exploded element — numCells cosines × dim per VECTOR
       // (measured r9: one Lloyd pass at 200k×64d ran 44 CPU-min/task
       // before this split; seconds after)
-      val means = train
+      val means = base
         .select(cellAssignment(col("v"), centroids).as("cell"), col("v"))
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cell"), col("pos")).agg(avg(col("x")).as("m"))
@@ -375,7 +370,7 @@ object Similarity {
     * [[annTopK]], trading LSH's obliviousness for data-adaptive cells:
     *
     *  1. TRAIN: `numCells` centroids by Lloyd iterations over a
-    *     deterministic corpus sample ([[trainCentroids]] — init =
+    *     the corpus ([[trainCentroids]] — init =
     *     smallest-xxhash64 ids, so retries replay identically).
     *     Centroids are driver-side (numCells × dim doubles — KBs),
     *     broadcast into expressions as literals, so assignment stays
@@ -405,11 +400,11 @@ object Similarity {
   def ivfTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, numCells: Int = 64, nProbe: Int = 32, lloydIters: Int = 2,
-      trainFraction: Double = 1.0): DataFrame = {
+      k: Int, numCells: Int = 64, nProbe: Int = 32,
+      lloydIters: Int = 2): DataFrame = {
     require(nProbe >= 1 && nProbe <= numCells, s"nProbe must be in [1, $numCells]")
     ivfTopKIndexed(
-      ivfIndex(corpus, idCol, vecCol, numCells, lloydIters, trainFraction),
+      ivfIndex(corpus, idCol, vecCol, numCells, lloydIters),
       queries, queryIdCol, queryVecCol, k, nProbe)
   }
 
@@ -432,13 +427,12 @@ object Similarity {
     * cells keep their previous centroid). */
   def ivfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
-      numCells: Int = 64, lloydIters: Int = 2,
-      trainFraction: Double = 1.0): IvfIndex = {
+      numCells: Int = 64, lloydIters: Int = 2): IvfIndex = {
     GraftFunctions.register(corpus.sparkSession)
     val dim = vecDim(corpus, vecCol)
     val base = corpus.select(
       col(idCol).as("id"), requireDim(asDouble(col(vecCol)), dim).as("v"))
-    val centroids = trainOnBase(base, numCells, lloydIters, trainFraction)
+    val centroids = trainOnBase(base, numCells, lloydIters)
     IvfIndex(
       base.withColumn("cell", cellAssignment(col("v"), centroids)),
       centroids, dim)
@@ -501,9 +495,8 @@ object Similarity {
         "(IndexStore.readIvfGeometry); load it with IndexStore.readIvf")
     GraftFunctions.register(queries.sparkSession)
     val centroids = index.centroids
-    // the training sample may yield FEWER centroids than numCells (tiny
-    // corpus or aggressive trainFraction) — probe count follows the
-    // actual centroid count, not the requested one
+    // a tiny corpus may yield FEWER centroids than numCells — probe
+    // count follows the actual centroid count, not the requested one
     val probes = math.min(nProbe, centroids.size)
     // nProbe nearest cells per query: sort (−sim, cell) structs, take nProbe
     val probeArr = slice(array_sort(array(centroids.zipWithIndex.map {

@@ -29,6 +29,18 @@ class CollapseEquivalenceSpec extends SparkSpec {
     twins.foldLeft(docs)(_ unionByName _).persist()
   }
 
+  /** Member-grain exact-duplicate classes — the text-partitioned window
+    * form of [[Dedup.exactClassAgg]], kept here as the reference the
+    * collapsed operators are checked against: each row gains its class
+    * (`__cls` = min id among rows with byte-identical text) and the
+    * class multiplicity (`__m`). */
+  private def withExactClasses(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(textCol))
+    df.withColumn("__cls", min(col(idCol)).over(w))
+      .withColumn("__m", count(lit(1)).over(w))
+  }
+
   test("q140-shape: collapsed source cell counts == uncollapsed ngramJaccard rollup") {
     val pairs = Dedup.ngramJaccard(corpus, "doc_id", "text", 3, 0.5)
     val src = corpus.select(col("doc_id"), col("source"))
@@ -43,7 +55,7 @@ class CollapseEquivalenceSpec extends SparkSpec {
     // helper's public consumer shape: re-derive cells from the
     // collapsed machinery by calling crossSourceOverlap's building
     // blocks — here, replicate via withExactClasses + combinatorics
-    val m = Dedup.withExactClasses(
+    val m = withExactClasses(
       corpus.select(col("doc_id"), col("text"), col("source").as("__tag")),
       "doc_id", "text")
     val perClsTag = m.groupBy(col("__cls"), col("__tag"))

@@ -69,11 +69,13 @@ class StreamingAnnIndexSpec extends SparkSpec {
     IndexStore.writeLsh(
       Similarity.lshIndex(base, "vec_id", "embedding", L = 8,
         pOverride = Some(5)), dir)
-    StreamingOps.lshIndexBatch(slice, 0L, dir, "vec_id", "embedding")
+    StreamingOps.indexBatch(slice, 0L, dir)(
+      StreamingOps.lshSegments(dir, "vec_id", "embedding"))
     val before = probe(IndexStore.readLsh(spark, dir), queries)
     val rowsBefore = IndexStore.readLsh(spark, dir).banded.count()
     // the injected crash-replay: the same batchId fires again
-    StreamingOps.lshIndexBatch(slice, 0L, dir, "vec_id", "embedding")
+    StreamingOps.indexBatch(slice, 0L, dir)(
+      StreamingOps.lshSegments(dir, "vec_id", "embedding"))
     val after = probe(IndexStore.readLsh(spark, dir), queries)
     assert(IndexStore.readLsh(spark, dir).banded.count() === rowsBefore,
       "replayed batch duplicated its postings")
@@ -150,9 +152,11 @@ class StreamingAnnIndexSpec extends SparkSpec {
     // (same id, same rows) — the segment path overwrites, row count
     // must not move
     val extra = emb.filter(col("vec_id") < 10) // ids unused by the store
-    StreamingOps.ivfPqIndexBatch(extra, 99L, dir, "vec_id", "embedding")
+    StreamingOps.indexBatch(extra, 99L, dir)(
+      StreamingOps.ivfPqSegments(dir, "vec_id", "embedding"))
     val rowsBefore = IndexStore.readIvfPq(spark, dir).data.count()
-    StreamingOps.ivfPqIndexBatch(extra, 99L, dir, "vec_id", "embedding")
+    StreamingOps.indexBatch(extra, 99L, dir)(
+      StreamingOps.ivfPqSegments(dir, "vec_id", "embedding"))
     assert(IndexStore.readIvfPq(spark, dir).data.count() === rowsBefore,
       "replayed batch duplicated coded rows")
   }

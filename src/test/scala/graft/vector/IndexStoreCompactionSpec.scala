@@ -100,6 +100,58 @@ class IndexStoreCompactionSpec extends SparkSpec {
     assert(probeAfter.nonEmpty)
   }
 
+  private def rows(df: DataFrame) =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+
+  test("write* onto a store with appended segments leaves only the new index") {
+    initQuiet()
+    val slice = emb.filter(col("vec_id") >= 60 && col("vec_id") < 100)
+    val (ivfDir, _) = ivfStoreWithSegments(1) // 8 cells, base + 1 segment
+    val ivf = Similarity.ivfIndex(slice, "vec_id", "embedding", numCells = 4)
+    IndexStore.writeIvf(ivf, ivfDir)
+    assert(IndexStore.segmentCount(spark, ivfDir, "data") === 1)
+    val ivfRead = IndexStore.readIvf(spark, ivfDir)
+    assert(ivfRead.centroids === ivf.centroids)
+    assert(rows(ivfRead.data) === rows(ivf.data),
+      "the store kept rows of the index it replaced")
+    val (lshDir, _) = lshStoreWithSegments(1)
+    val lsh = Similarity.lshIndex(slice, "vec_id", "embedding", L = 4,
+      pOverride = Some(3))
+    IndexStore.writeLsh(lsh, lshDir)
+    assert(IndexStore.segmentCount(spark, lshDir, "banded") === 1)
+    assert(IndexStore.segmentCount(spark, lshDir, "vectors") === 1)
+    val lshRead = IndexStore.readLsh(spark, lshDir)
+    assert(lshRead.p === 3 && lshRead.L === 4)
+    assert(rows(lshRead.banded) === rows(lsh.banded),
+      "the store kept postings of the index it replaced")
+    assert(rows(lshRead.vectors) === rows(lsh.vectors))
+  }
+
+  test("compactIvf heals a store left mid-swap, losing no row") {
+    initQuiet()
+    import java.nio.file.{Files, Paths}
+    // the two states a crash between the swap's renames can leave: the
+    // live tree moved aside with the complete compacted copy beside it
+    // (committed: promoted), or with an uncommitted one (put back)
+    for (committed <- Seq(true, false)) {
+      val (dir, queries) = ivfStoreWithSegments(3)
+      val before = IndexStore.readIvf(spark, dir)
+      val rowsBefore = rows(before.data)
+      val probeBefore = probeIvf(before, queries)
+      spark.read.parquet(s"$dir/data").drop("batch")
+        .write.parquet(s"$dir/data.staged/batch=-1")
+      if (committed) Files.createFile(Paths.get(s"$dir/data.staged/_SUCCESS"))
+      Files.move(Paths.get(s"$dir/data"), Paths.get(s"$dir/data.old"))
+      IndexStore.compactIvf(spark, dir)
+      assert(IndexStore.segmentCount(spark, dir, "data") === 1)
+      val after = IndexStore.readIvf(spark, dir)
+      assert(rows(after.data) === rowsBefore, s"committed=$committed")
+      assert(probeIvf(after, queries) === probeBefore)
+      assert(!Files.exists(Paths.get(s"$dir/data.staged")) &&
+        !Files.exists(Paths.get(s"$dir/data.old")))
+    }
+  }
+
   test("rebuildLsh == fresh build over the merged corpus (and collapses segments)") {
     initQuiet()
     val (dir, queries) = lshStoreWithSegments(2)
