@@ -1,8 +1,9 @@
 package graft
 
-import graft.functions.expressions.{CellArgMax, CosineSimilarity, JaccardSimilarity, JaroWinkler, MinHashSignature, PqEncode, PqLut, SimHash64}
+import graft.functions.expressions.{BandHashes, CellArgMax, CosineSimilarity, JaccardSimilarity, JaroWinkler, MinHashSignature, PqEncode, PqLut, SimHash64, TokenBigrams, WordNgrams}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.NativeColumn
 
 /** Engine extensions, injectable at session build time:
   *
@@ -17,14 +18,7 @@ import org.apache.spark.sql.functions.call_function
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftFunctions.cosineSimDescriptor)
-    e.injectFunction(GraftFunctions.jaccardSimDescriptor)
-    e.injectFunction(GraftFunctions.minhashSigDescriptor)
-    e.injectFunction(GraftFunctions.simhash64Descriptor)
-    e.injectFunction(GraftFunctions.jaroWinklerDescriptor)
-    e.injectFunction(GraftFunctions.cellArgmaxDescriptor)
-    e.injectFunction(GraftFunctions.pqEncodeDescriptor)
-    e.injectFunction(GraftFunctions.pqLutDescriptor)
+    GraftFunctions.descriptors.foreach(e.injectFunction)
   }
 }
 
@@ -87,26 +81,35 @@ object GraftFunctions {
     new ExpressionInfo(classOf[PqLut].getName, "pq_lut"),
     (exprs: Seq[Expression]) => PqLut(exprs(0), exprs(1)))
 
+  private[graft] val wordNgramsDescriptor:
+      (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("word_ngrams"),
+    new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
+    (exprs: Seq[Expression]) =>
+      WordNgrams(exprs(0), asLiteralInt(exprs(1), "word_ngrams n")))
+
+  private[graft] val tokenBigramsDescriptor:
+      (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("token_bigrams"),
+    new ExpressionInfo(classOf[TokenBigrams].getName, "token_bigrams"),
+    (exprs: Seq[Expression]) => TokenBigrams(exprs(0)))
+
+  private[graft] val bandHashesDescriptor:
+      (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("band_hashes"),
+    new ExpressionInfo(classOf[BandHashes].getName, "band_hashes"),
+    (exprs: Seq[Expression]) => BandHashes(exprs(0),
+      asLiteralInt(exprs(1), "band_hashes b"), asLiteralInt(exprs(2), "band_hashes r")))
+
+  private[graft] val descriptors = Seq(cosineSimDescriptor, jaccardSimDescriptor,
+    minhashSigDescriptor, simhash64Descriptor, jaroWinklerDescriptor,
+    cellArgmaxDescriptor, pqEncodeDescriptor, pqLutDescriptor,
+    wordNgramsDescriptor, tokenBigramsDescriptor, bandHashesDescriptor)
+
   /** Register on a live session (temp function, session-scoped). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccard_sim", exprs => JaccardSimilarity(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinHashSignature(exprs(0), asLiteralInt(exprs(1), "minhash_sig k")),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cell_argmax", exprs => CellArgMax(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_lut", exprs => PqLut(exprs(0), exprs(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = descriptors.foreach { case (id, _, builder) =>
+    spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(id.funcName, builder, "scala_udf")
   }
 
   /** Column-API faces of the native expressions (require registration). */
@@ -123,4 +126,13 @@ object GraftFunctions {
     call_function("pq_encode", vec, books)
   def pqLut(vec: Column, books: Column): Column =
     call_function("pq_lut", vec, books)
+
+  /** Column-API faces of the text kernels. Each holds its expression
+    * directly, so it needs no registration on the session it runs in. */
+  def wordNgrams(toks: Column, n: Int): Column =
+    NativeColumn(WordNgrams(NativeColumn.expr(toks), n))
+  def tokenBigrams(toks: Column): Column =
+    NativeColumn(TokenBigrams(NativeColumn.expr(toks)))
+  def bandHashes(sig: Column, b: Int, r: Int): Column =
+    NativeColumn(BandHashes(NativeColumn.expr(sig), b, r))
 }

@@ -1069,8 +1069,7 @@ object Curation {
     val n = size(col("toks"))
     val stopHits = size(filter(col("ltoks"), t => t.isin(oracleStopwords: _*)))
     val rep = lit(1.0) -
-      size(array_distinct(transform(sequence(lit(1), greatest(n - 2, lit(1))),
-        i => concat_ws(" ", slice(col("toks"), i, lit(3)))))).cast("double") /
+      size(array_distinct(graft.GraftFunctions.wordNgrams(col("toks"), 3))).cast("double") /
         greatest(n - 2, lit(1))
     val pass = n.between(10, 1000) &&
       (stopHits.cast("double") / n >= 0.05) && (rep <= 0.2)
@@ -1649,10 +1648,8 @@ object Curation {
       .groupBy(col("__t")).agg(sum(col("__m")).as("__c"))
     val nuni = uni.agg(sum(col("__c")).as("__nu"))
     val bi = toks.filter(size(col("__toks")) >= 2)
-      .select(col("__m"), explode(transform(
-        sequence(lit(1), size(col("__toks")) - 1),
-        i => struct(element_at(col("__toks"), i).as("a"),
-          element_at(col("__toks"), i + 1).as("b")))).as("__bg"))
+      .select(col("__m"),
+        explode(graft.GraftFunctions.tokenBigrams(col("__toks"))).as("__bg"))
       .select(col("__m"), col("__bg.a").as("token_a"), col("__bg.b").as("token_b"))
       .groupBy(col("token_a"), col("token_b"))
       .agg(sum(col("__m")).as("c_ab"))
@@ -1687,10 +1684,8 @@ object Curation {
     val bi = Tables.load(spark, dir, "documents")
       .select(col("source"), split(lower(col("text")), " ").as("__toks"))
       .filter(size(col("__toks")) >= 2)
-      .select(col("source"), explode(transform(
-        sequence(lit(1), size(col("__toks")) - 1),
-        i => struct(element_at(col("__toks"), i).as("a"),
-          element_at(col("__toks"), i + 1).as("b")))).as("__bg"))
+      .select(col("source"),
+        explode(graft.GraftFunctions.tokenBigrams(col("__toks"))).as("__bg"))
       .groupBy(col("source"), col("__bg.a").as("a"), col("__bg.b").as("b"))
       .agg(count(lit(1)).as("c_ab"))
     val wA = Window.partitionBy(col("source"), col("a"))

@@ -38,12 +38,6 @@ object Selection {
 
   private def toks(c: Column): Column = split(lower(c), " ")
 
-  /** Adjacent-token bigrams of `t` (an array column) as (a, b) structs;
-    * callers filter `size(t) >= 2` upstream. */
-  private def bigrams(t: Column): Column =
-    transform(sequence(lit(1), size(t) - 1),
-      i => struct(element_at(t, i).as("a"), element_at(t, i + 1).as("b")))
-
   /** q252 — reference-LM perplexity quality gate (oracle-checked):
     * train an add-one-smoothed token-bigram LM on the `lang = 'en'`
     * slice (the "trusted reference" in CCNet terms), score EVERY ≥2-
@@ -123,7 +117,8 @@ object Selection {
     // exploded bigram stream; materialized eagerly by the V probe just
     // below.
     val docBi = graft.CacheScope.keep(docs
-      .select(ids :+ col("__ref") :+ explode(bigrams(col("__t"))).as("__bg"): _*)
+      .select(ids :+ col("__ref") :+
+        explode(graft.GraftFunctions.tokenBigrams(col("__t"))).as("__bg"): _*)
       .groupBy(ids :+ col("__ref") :+ col("__bg.a").as("a") :+
         col("__bg.b").as("b"): _*)
       .agg(count(lit(1)).as("m")))
@@ -337,8 +332,7 @@ object Selection {
       .select(col("__cls"), col("__m"), toks(col("__txt")).as("__t"))
       .filter(size(col("__t")) >= 5)
       .select(col("__cls"), col("__m"),
-        explode(array_distinct(transform(sequence(lit(1), size(col("__t")) - 4),
-          i => concat_ws(" ", slice(col("__t"), i, lit(5)))))).as("s"))
+        explode(array_distinct(graft.GraftFunctions.wordNgrams(col("__t"), 5))).as("s"))
     val df = sh.groupBy(col("s").as("__s")).agg(sum(col("__m")).as("df"))
     val cls = sh.join(df, col("s") === col("__s"))
       .groupBy(col("__cls"))
@@ -530,8 +524,7 @@ object Selection {
       .select(col("source"), toks(col("text")).as("__t"))
       .filter(size(col("__t")) >= 8)
       .select(col("source"),
-        explode(transform(sequence(lit(1), size(col("__t")) - 7),
-          i => concat_ws(" ", slice(col("__t"), i, lit(8))))).as("s"))
+        explode(graft.GraftFunctions.wordNgrams(col("__t"), 8)).as("s"))
       .distinct()
     graft.CacheScope.eager(g) // three consumers race the cache otherwise
     val sz = g.groupBy(col("source").as("__szs"))

@@ -336,18 +336,14 @@ object StreamingOps {
     graft.GraftFunctions.register(spark)
     val k = b * r
     val horizonUs = horizonSeconds * 1000000L
-    // project FIRST (tokens → shingles as a bound attribute — the
-    // shingleTable evaluation-shape rule), watermark the projected ts,
-    // THEN explode to band buckets so the event-time tag rides through
+    // project FIRST (shingles via Dedup.shingles, the batch
+    // definition), watermark the projected ts, THEN explode to band
+    // buckets so the event-time tag rides through
     val banded = docs
       .select(col(idCol).cast("long").as("id"),
         col(tsCol).cast("timestamp").as("ts"),
         unix_micros(col(tsCol)).as("us"),
-        split(col(textCol), " ").as("toks"))
-      .select(col("id"), col("ts"), col("us"),
-        array_distinct(transform(
-          sequence(lit(1), greatest(size(col("toks")) - (shingleLen - 1), lit(1))),
-          i => concat_ws(" ", slice(col("toks"), i, lit(shingleLen))))).as("sh"))
+        graft.text.Dedup.shingles(col(textCol), shingleLen).as("sh"))
       .select(col("id"), col("ts"), col("us"),
         graft.text.Dedup.bandHashes(
           graft.text.Dedup.minhashSignature(col("sh"), k), b, r).as("bands"),

@@ -35,14 +35,12 @@ object Boilerplate {
 
   /** All n-grams of `text` (whitespace tokens) as an array column, in
     * position order; empty array when the document has fewer than `n`
-    * tokens (guarding `sequence`'s descending-range behavior).
+    * tokens, null for a null text.
     */
   def ngrams(text: Column, n: Int): Column = {
     val toks = split(text, " ")
     when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
+      .when(size(toks) >= n, graft.GraftFunctions.wordNgrams(toks, n))
   }
 
   /** Document frequency of every n-gram: one row per distinct n-gram

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * All variants are pure Catalyst expression compositions — shingling,
-  * MinHash, SimHash and banding run inside whole-stage codegen via
-  * higher-order functions and the native `hash`/`xxhash64` expressions.
+  * MinHash, SimHash and banding run inside whole-stage codegen as the
+  * native expressions of `graft.functions.expressions`.
   * No UDFs, no driver-side loops: every step is a distributed map or a
   * keyed shuffle, so the same plan that dedups 5 000 docs dedups 10 B.
   *
@@ -181,37 +181,24 @@ object Dedup {
     cross.unionByName(within)
   }
 
-  /** Word-level shingles (n-gram tokens joined by space), distinct.
-    *
-    * ⚠ Evaluation hazard: `text` should be a plain column reference, and
-    * heavy pipelines should shingle via [[shingleTable]] instead. When
-    * this expression falls out of codegen (nested HOFs do), interpreted
-    * mode re-evaluates the `split` subtree for EVERY lambda element —
-    * O(tokens²) per row. Observed: 21 CPU-minutes on one partition at
-    * sf0.1. [[shingleTable]] materializes tokens as an attribute first,
-    * so lambdas bind a column reference, not a recomputed subtree.
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = split(text, " ")
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-  }
+  /** Word-level shingles (n-gram tokens joined by space), distinct: the
+    * native [[graft.functions.expressions.WordNgrams]] kernel, which
+    * evaluates `split(text, ' ')` once per row whatever `text` is. */
+  def shingles(text: Column, n: Int): Column =
+    array_distinct(graft.GraftFunctions.wordNgrams(split(text, " "), n))
 
-  /** (id, shingles) relation with safe evaluation shape: tokens are
-    * projected to a column before the shingle lambda references them
-    * (attribute reads are bound once per row — no subtree recompute),
-    * and rows are spread across cores first — parallelism of a scan
-    * follows file bytes, but shingling cost follows row count, so a
-    * 2 MB / 5 000-doc file would otherwise shingle on ONE task.
+  /** (id, shingles) relation, rows spread across cores first:
+    * parallelism of a scan follows file bytes, but shingling cost
+    * follows row count, so a 2 MB / 5 000-doc file would otherwise
+    * shingle on ONE task. The native kernel splits each text once,
+    * so no token projection is needed.
     */
   private[graft] def shingleTable(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     // INVARIANT (load-bearing, r10 ADVICE): every doc emits >= 1
-    // shingle — the greatest(..., 1) arm degrades a sub-n-token text to
-    // one whole-text shingle rather than zero rows. Identical texts
+    // shingle — word_ngrams degrades a sub-n-token text to one
+    // whole-text shingle rather than zero rows. Identical texts
     // therefore ALWAYS self-pair at J = 1 in the enumerators built on
     // this table, which is what lets Curation.dedupClustersOf's iso arm
     // claim "multi-member class whose representative pairs with nothing
@@ -221,12 +208,7 @@ object Dedup {
     // q42-shape test; change the fallback and that spec must change
     // with it.
     df.repartition(parallelism, col(idCol))
-      .select(col(idCol).as("id"), split(col(textCol), " ").as("toks"))
-      .select(col("id"),
-        array_distinct(
-          transform(
-            sequence(lit(1), greatest(size(col("toks")) - (n - 1), lit(1))),
-            i => concat_ws(" ", slice(col("toks"), i, lit(n))))).as("sh"))
+      .select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
   }
 
   /** MinHash signature of a shingle array: `k` independent min-hashes.
@@ -252,10 +234,10 @@ object Dedup {
   /** LSH band keys: band j = hash of the j-th `r`-slice of a `b·r`-long
     * MinHash signature. THE banding definition — [[nearMinhash]] and
     * [[decontaminateFuzzy]] must band identically or their collision
-    * guarantees silently diverge, so both call this. */
+    * guarantees silently diverge, so both call this. Native kernel:
+    * [[graft.functions.expressions.BandHashes]]. */
   private[graft] def bandHashes(sig: Column, b: Int, r: Int): Column =
-    transform(sequence(lit(0), lit(b - 1)),
-      j => hash(slice(sig, j * r + 1, lit(r))))
+    graft.GraftFunctions.bandHashes(sig, b, r)
 
   /** Candidate near-duplicate pairs via MinHash-LSH banding.
     *
@@ -393,9 +375,11 @@ object Dedup {
       }
     }
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    // tokens as an attribute before the 64-wide vote lambdas (see
-    // shingleTable evaluation-shape note); fingerprinting is CPU-bound,
-    // so spread rows regardless of input file size
+    // fingerprinting is CPU-bound, so spread rows regardless of input
+    // file size. The token projection is not a guaranteed shape:
+    // CollapseProject may fold `split` into `sig`, which the native
+    // simhash evaluates once per row but the md5 form's lambdas
+    // re-evaluate per element
     val fp = df.repartition(parallelism, col(idCol))
       .select(col(idCol).as("id"), split(col(textCol), " ").as("toks"))
       .select(col("id"), sig(col("toks")).as("fp"))
@@ -626,11 +610,15 @@ object Dedup {
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
             .as("cluster_id")))
-      // labels only ever decrease, so "no label decreased" = fixpoint
+      // labels only ever decrease, so "no label decreased" = fixpoint.
+      // A plain count, not limit(1).count(): a limit inside a codegen
+      // stage names its counter from a JVM-wide sequence, so every such
+      // probe is new generated code that the code cache can never hit
+      // (and head(1) would launch a job per scale-up step instead)
       val changed = next
         .join(labels.withColumnRenamed("cluster_id", "prev"), Seq("id"))
         .filter(col("cluster_id") < col("prev"))
-        .limit(1).count()
+        .count()
       graft.CacheScope.release(labels)
       dropCheckpoint(labelsCkpt) // superseded: next is durable, changed computed
       labels = next
@@ -862,11 +850,8 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val sh = df.repartition(parallelism, col(idCol))
-      .select(col(idCol).as("id"), split(col(textCol), " ").as("toks"))
-      .select(col("id"),
-        transform(
-          sequence(lit(1), greatest(size(col("toks")) - (shingleLen - 1), lit(1))),
-          i => concat_ws(" ", slice(col("toks"), i, lit(shingleLen)))).as("sh"))
+      .select(col(idCol).as("id"),
+        graft.GraftFunctions.wordNgrams(split(col(textCol), " "), shingleLen).as("sh"))
     val cnt = sh
       .select(col("id"), size(col("sh")).as("tot"), explode(col("sh")).as("s"))
       .groupBy(col("id"), col("tot"), col("s")).agg(count(lit(1)).as("c"))

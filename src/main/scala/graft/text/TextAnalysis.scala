@@ -248,21 +248,16 @@ object TextAnalysis {
   /** Within-document repetition ratio — the Gopher-style quality
     * signal: 1 − |distinct n-grams| / |n-grams| over token `n`-grams
     * (0 = no repeated n-gram, →1 = highly repetitive boilerplate).
-    * Returns 0 for docs with < n tokens (no n-gram at all — and the
-    * guard keeps `sequence` from seeing a negative bound, which would
-    * otherwise generate a DESCENDING range).
-    *
-    * `toks` must be a materialized ATTRIBUTE (project `split` to a
-    * column first — see `Dedup.shingleTable`'s evaluation-shape note):
-    * HOF lambdas re-evaluate subtree arguments per element in
-    * interpreted mode, turning an inline `split` into O(tokens²) work.
+    * Returns 0 for docs with < n tokens (no n-gram at all). The grams
+    * come from the native [[graft.functions.expressions.WordNgrams]]
+    * kernel, which evaluates `toks` once per row, so `toks` may be any
+    * expression (an inline `split` included).
     */
   def repetitionRatioOfTokens(toks: Column, n: Int = 3): Column = {
     val total = size(toks) - (n - 1)
-    val grams = transform(sequence(lit(1), total),
-      i => concat_ws(" ", slice(toks, i, lit(n))))
     when(size(toks) >= n,
-      lit(1.0) - size(array_distinct(grams)).cast("double") / total)
+      lit(1.0) - size(array_distinct(graft.GraftFunctions.wordNgrams(toks, n)))
+        .cast("double") / total)
       .otherwise(lit(0.0))
   }
 
@@ -278,9 +273,11 @@ object TextAnalysis {
     * Output: the input row × (`chunk_idx` 0-based, `chunk`
     * array<string>). Narrow map + generate — no shuffle; chunk count
     * per row is (n−size)/step bounded, so output size scales linearly
-    * with corpus tokens at any scale. Same evaluation-shape discipline
-    * as [[spanTable]]: tokens materialize to an attribute before the
-    * slicing lambda reads them.
+    * with corpus tokens at any scale. The slicing lambda stays a
+    * higher-order function (interpreted), and its evaluation shape is
+    * not guaranteed: tokens are projected to a column first, but
+    * CollapseProject may fold `split` back into the lambda, which then
+    * re-splits the text per chunk.
     */
   def chunkTokens(df: DataFrame, idCol: String, textCol: String,
       chunkSize: Int, overlap: Int): DataFrame = {
@@ -302,9 +299,8 @@ object TextAnalysis {
     * whole-document similarity (boilerplate, quotations, templated
     * text). Documents shorter than `spanLen` tokens emit nothing.
     *
-    * Same evaluation-shape discipline as `Dedup.shingleTable`: tokens
-    * are materialized to an attribute before the span lambda reads them
-    * (no per-element subtree recompute), rows are spread across cores
+    * Spans come from the native [[graft.functions.expressions.WordNgrams]]
+    * kernel (tokens evaluated once per row), rows are spread across cores
     * first (span cost follows row count, not file bytes), and
     * `array_distinct` runs BEFORE the explode so a span repeated within
     * one document crosses the shuffle once. Downstream aggregation
@@ -320,9 +316,7 @@ object TextAnalysis {
       .filter(size(col("toks")) >= spanLen)
       .select(col("id"),
         explode(array_distinct(
-          transform(
-            sequence(lit(1), size(col("toks")) - (spanLen - 1)),
-            i => concat_ws(" ", slice(col("toks"), i, lit(spanLen)))))).as("span"))
+          graft.GraftFunctions.wordNgrams(col("toks"), spanLen))).as("span"))
   }
 
   /** Spans of `spanLen` tokens duplicated ACROSS documents: one row per

@@ -89,4 +89,53 @@ class ExamplesSpec extends SparkSpec {
     assert(stats("validated") == clean("validated"))
     assert(stats("train") == clean("train"))
   }
+
+  test("PretrainPipeline: no per-row text lambda is left but Validate's violations filter") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, CreateArray, HigherOrderFunction}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every operator of an executed plan, the plans of the frames it
+    // reads from the cache and its subqueries included; an adaptive
+    // plan's input plan too, since its final plan may have replaced a
+    // branch that read nothing
+    def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => operators(a.inputPlan) ++ operators(a.executedPlan)
+      case q: QueryStageExec => operators(q.plan)
+      case r: ReusedExchangeExec => operators(r.child)
+      case m: InMemoryTableScanExec => m +: operators(m.relation.cachedPlan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(operators)
+    }
+    // Validate.split's `filter(array(<rule flags>), v -> v IS NOT NULL)`
+    def violationsFilter(h: HigherOrderFunction): Boolean = h match {
+      case f: ArrayFilter => f.argument.isInstanceOf[CreateArray]
+      case _ => false
+    }
+    val marker = "examples-spec-hof-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    @volatile var markerSeen = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (qe.executedPlan.toString.contains(marker)) markerSeen = true
+        else operators(qe.executedPlan).flatMap(_.expressions)
+          .flatMap(_.collect { case h: HigherOrderFunction if !violationsFilter(h) => h })
+          .foreach(h => seen.add(h.sql))
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      PretrainPipeline.run(spark, sf)
+      // listener events arrive in order: once the marker query's event is
+      // in, every pipeline query's event has been handled
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(markerSeen, "the listener never saw the marker query")
+    } finally spark.listenerManager.unregister(listener)
+    val left = seen.toArray.map(_.toString).distinct
+    assert(left.isEmpty, s"higher-order functions left in the pipeline's plans:\n${left.mkString("\n")}")
+  }
 }

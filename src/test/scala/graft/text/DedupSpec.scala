@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -405,5 +406,112 @@ class DedupSpec extends SparkSpec {
     val pref = Dedup.ngramJaccardPrefix(docs, "doc_id", "text", 3, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(pref == full && full.nonEmpty)
+  }
+
+  // ---- native text kernels vs the lambda forms they replace ----------
+  // Each case runs under whole-stage codegen and again interpreted, so
+  // both the generated code and `eval` are held to the reference.
+
+  private def bothPaths[T](body: => T): Seq[T] =
+    Seq("CODEGEN_ONLY", "NO_CODEGEN").map { mode =>
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
+      try body
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
+  /** Token arrays: every sf0.001 document split on ' ', planted texts
+    * (null, empty, leading/trailing/repeated spaces, short, non-ASCII)
+    * and arrays with null tokens or none at all. */
+  private lazy val tokArrays = {
+    val planted = Seq[String](null, "", " ", "a", "a b", "  lead", "trail  ",
+      "a  b   c", " x y z w v u t s r q ", "über straße für naïve café ünïcödé 日本語 テキスト",
+      "repeat repeat repeat repeat repeat repeat repeat repeat repeat")
+      .toDF("text")
+    val arrays = Seq(Seq[String]("a", null, "b", "c"), Seq[String](null, null),
+      Seq[String](null), Seq.empty[String], Seq[String]("", null, "", "x", null),
+      null).toDF("toks")
+    docs.select(split(col("text"), " ").as("toks"))
+      .unionByName(planted.select(split(col("text"), " ").as("toks")))
+      .unionByName(arrays)
+  }
+
+  /** The lambda form [[graft.functions.expressions.WordNgrams]] replaces. */
+  private def wordNgramsRef(toks: Column, n: Int): Column =
+    transform(sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
+      i => concat_ws(" ", slice(toks, i, lit(n))))
+
+  test("native word_ngrams equals the lambda form (n = 1, 3, 8, planted edge rows)") {
+    for (n <- Seq(1, 3, 8)) {
+      val runs = bothPaths(tokArrays.select(
+          graft.GraftFunctions.wordNgrams(col("toks"), n).as("native"),
+          wordNgramsRef(col("toks"), n).as("ref"))
+        .collect())
+      runs.foreach { rows =>
+        assert(rows.length > 400)
+        rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1),
+          s"n=$n: ${r.getSeq[String](0)} != ${r.getSeq[String](1)}"))
+      }
+    }
+    // the edge rows as rendered: null text and "" give one "" gram, a
+    // null token is skipped inside its gram, and "a  b" keeps its empty
+    // token (so its 2-gram "a " differs from "a b")
+    val planted = Seq[(Seq[String], Seq[String])](
+      (null, Seq("")), (Seq(""), Seq("")), (Seq("a", "", "b"), Seq("a ", " b")),
+      (Seq("a", null, "b"), Seq("a", "b")), (Seq("a"), Seq("a")))
+    planted.foreach { case (toks, grams) =>
+      val got = bothPaths(Seq(Tuple1(toks)).toDF("toks")
+        .select(graft.GraftFunctions.wordNgrams(col("toks"), 2)).head.getSeq[String](0))
+      assert(got.forall(_ == grams), s"$toks -> $got, expected $grams")
+    }
+  }
+
+  test("native token_bigrams equals the lambda form on arrays of 2+ tokens") {
+    val t = col("toks")
+    val ref = transform(sequence(lit(1), size(t) - 1),
+      i => struct(element_at(t, i).as("a"), element_at(t, i + 1).as("b")))
+    val runs = bothPaths(tokArrays.filter(size(t) >= 2)
+      .select(graft.GraftFunctions.tokenBigrams(t).as("native"), ref.as("ref"))
+      .collect())
+    runs.foreach { rows =>
+      assert(rows.length > 400)
+      rows.foreach(r => assert(r.getSeq[Row](0) == r.getSeq[Row](1),
+        s"${r.getSeq[Row](0)} != ${r.getSeq[Row](1)}"))
+    }
+    val schema = tokArrays.select(graft.GraftFunctions.tokenBigrams(t).as("bg")).schema
+    assert(schema("bg").dataType.simpleString == "array<struct<a:string,b:string>>")
+  }
+
+  test("native band_hashes equals the lambda form at (b, r) = (16, 4) and (32, 2)") {
+    val sigs = docs.select(Dedup.minhashSignature(Dedup.shingles(col("text"), 3), 64)
+        .as("sig"))
+      .unionByName(Seq(Seq(1, 2, 3), Seq.empty[Int]).toDF("sig")) // shorter than b·r
+      .unionByName(Seq[Seq[java.lang.Integer]](Seq(7, null, 9, null), null)
+        .toDF("sig"))
+    for ((b, r) <- Seq((16, 4), (32, 2))) {
+      val ref = transform(sequence(lit(0), lit(b - 1)),
+        j => hash(slice(col("sig"), j * r + 1, lit(r))))
+      val runs = bothPaths(sigs.select(
+          graft.GraftFunctions.bandHashes(col("sig"), b, r).as("native"), ref.as("ref"))
+        .collect())
+      runs.foreach { rows =>
+        assert(rows.length > 100)
+        rows.foreach(r2 => assert(r2.getSeq[Int](0) == r2.getSeq[Int](1),
+          s"(b=$b, r=$r): ${r2.getSeq[Int](0)} != ${r2.getSeq[Int](1)}"))
+      }
+    }
+  }
+
+  test("text kernels resolve by SQL name once registered") {
+    graft.GraftFunctions.register(spark)
+    val r = spark.sql("SELECT word_ngrams(split('a b c', ' '), 2) AS g, " +
+      "token_bigrams(split('a b c', ' ')) AS bg, band_hashes(array(1, 2, 3, 4), 2, 2) AS bh")
+      .head
+    assert(r.getSeq[String](0) == Seq("a b", "b c"))
+    assert(r.getSeq[Row](1) == Seq(Row("a", "b"), Row("b", "c")))
+    assert(r.getSeq[Int](2).length == 2)
   }
 }
