@@ -29,8 +29,8 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * Null ELEMENTS mirror the HOF/`Murmur3Hash` semantics: a null input
   * leaves the running hash at its seed (42), so a null shingle
   * contributes `hashInt(j, 42)` to seed j's min (not an NPE — this
-  * expression is registered session-wide as SQL `minhash_sig`, so
-  * arbitrary user arrays reach it).
+  * expression is public, as `GraftFunctions.minhashSig` and SQL
+  * `minhash_sig`, so arbitrary user arrays reach it).
   */
 case class MinHashSignature(child: Expression, k: Int)
     extends UnaryExpression with ExpectsInputTypes {

@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *
   * Null ELEMENTS mirror the HOF/`XxHash64` semantics: `xxhash64(null)`
   * leaves the hash at its seed (42), so a null token votes with the bits
-  * of 42L (not an NPE — this expression is registered session-wide as
-  * SQL `simhash64`, so arbitrary user arrays reach it).
+  * of 42L (not an NPE — this expression is public, as
+  * `GraftFunctions.simhash64` and SQL `simhash64`, so arbitrary user
+  * arrays reach it).
   */
 case class SimHash64(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {

@@ -590,7 +590,6 @@ object Curation {
 
   /** [[pqDistortion]] core over any (vec_id, label, embedding) frame. */
   def pqDistortionOf(emb: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(emb.sparkSession)
     val model = labelPqModel(emb)
     val cls = emb.groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("vec_id"), min(col("label")).as("label"),

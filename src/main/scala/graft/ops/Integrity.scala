@@ -347,7 +347,6 @@ object Integrity {
     * driver's gate, pair by pair.
     */
   def jaroPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val vocab = Tables.load(spark, dir, "documents")
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)

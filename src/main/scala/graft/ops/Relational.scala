@@ -275,7 +275,6 @@ object Relational {
   /** Q13 — brute-force cosine top-k vs query vector 0 (exact baseline the
     * LSH path approximates). Query vector is a 1-row broadcast. */
   def q13(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
     val q = emb.filter(col("vec_id") === 0)
       .select(asDouble(col("embedding")).as("qv"))

@@ -333,7 +333,6 @@ object StreamingOps {
       watermark: String = "1 hour"): Dataset[FuzzyDupPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.GraftFunctions.register(spark)
     val k = b * r
     val horizonUs = horizonSeconds * 1000000L
     // project FIRST (shingles via Dedup.shingles, the batch

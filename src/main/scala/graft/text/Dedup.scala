@@ -213,9 +213,8 @@ object Dedup {
 
   /** MinHash signature of a shingle array: `k` independent min-hashes.
     * Native one-pass expression (see
-    * [[graft.functions.expressions.MinHashSignature]]) — requires
-    * [[graft.GraftFunctions.register]] on the session (the dedup entry
-    * points do it). Bit-identical to [[minhashSignatureHof]].
+    * [[graft.functions.expressions.MinHashSignature]]). Bit-identical to
+    * [[minhashSignatureHof]].
     */
   def minhashSignature(shingleArr: Column, k: Int): Column =
     graft.GraftFunctions.minhashSig(shingleArr, k)
@@ -254,7 +253,6 @@ object Dedup {
       r: Int = 4,
       threshold: Double = 0.8): DataFrame = {
     val k = b * r
-    graft.GraftFunctions.register(df.sparkSession)
     val sh = shingleTable(df, idCol, textCol, shingleLen)
     // band j → hash of the j-th r-slice of the signature. Only (id, band
     // hash) flows into the self-join — shingle arrays would be replicated
@@ -270,7 +268,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
     // re-attach shingles to candidates only (collision-rate-sized), then
     // verify with exact Jaccard
-    graft.GraftFunctions.register(df.sparkSession)
     cand
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
@@ -283,8 +280,7 @@ object Dedup {
   /** 64-bit SimHash fingerprint of the token multiset of `text`:
     * each token contributes ±1 per bit from its xxhash64; positive vote
     * sum ⇒ bit set. Native one-pass expression (see
-    * [[graft.functions.expressions.SimHash64]]); requires
-    * [[graft.GraftFunctions.register]] (the dedup entry points do it).
+    * [[graft.functions.expressions.SimHash64]]).
     */
   def simhash(text: Column): Column = simhashOfTokens(split(text, " "))
 
@@ -362,7 +358,6 @@ object Dedup {
     // of the corpus and banding no longer bounds anything
     require(maxHamming >= 0 && (maxHamming + 1) * 2 <= sigBits,
       s"maxHamming must be in [0, ${sigBits / 2 - 1}] for $sigBits-bit signatures, got $maxHamming")
-    graft.GraftFunctions.register(df.sparkSession)
     val numChunks = maxHamming + 1
     // distribute sigBits bits over numChunks chunks, widths differing by ≤1
     val baseW = sigBits / numChunks
@@ -423,7 +418,6 @@ object Dedup {
       shingleLen: Int = 3,
       threshold: Double = 0.5,
       maxDocFreq: Long = 1000): DataFrame = {
-    graft.GraftFunctions.register(df.sparkSession)
     val sh = shingleTable(df, idCol, textCol, shingleLen)
     val inv = sh.select(col("id"), explode(col("sh")).as("s"))
     val cold = inv.groupBy(col("s"))
@@ -471,7 +465,6 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     require(threshold == 0.5,
       "integer prefix arithmetic below is specialized to t = 0.5")
-    graft.GraftFunctions.register(df.sparkSession)
     val sh = shingleTable(df, idCol, textCol, shingleLen)
     val inv = sh.select(col("id"), size(col("sh")).as("n"),
       explode(col("sh")).as("s"))
@@ -749,7 +742,6 @@ object Dedup {
       r: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     val k = b * r
-    graft.GraftFunctions.register(corpus.sparkSession)
     def banded(sh: DataFrame): DataFrame = sh
       .withColumn("sig", minhashSignature(col("sh"), k))
       .select(col("id"), col("sh"),

@@ -86,7 +86,6 @@ object Pq {
   def pqTrain(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, ksub: Int = 64, lloydIters: Int = 2): PqModel = {
-    GraftFunctions.register(corpus.sparkSession)
     val dim = Similarity.vecDim(corpus, vecCol)
     require(m >= 1 && dim % m == 0, s"dim $dim must be divisible by m=$m")
     val base = corpus.select(
@@ -142,7 +141,6 @@ object Pq {
     * float vectors are only needed again for exact reranking. */
   def pqEncodeFrame(
       df: DataFrame, idCol: String, vecCol: String, model: PqModel): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.select(
         col(idCol).as("id"),
         Similarity.requireDim(asDouble(col(vecCol)), model.dim).as("v"))
@@ -190,7 +188,6 @@ object Pq {
   private def queryLuts(
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       model: PqModel): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     queries.select(
         col(queryIdCol).as("query_id"),
         Similarity.requireDim(asDouble(col(queryVecCol)), model.dim).as("qv"))
@@ -240,7 +237,6 @@ object Pq {
       corpus: DataFrame, idCol: String, vecCol: String,
       numCells: Int = 64, m: Int = 8, ksub: Int = 64,
       lloydIters: Int = 2): IvfPqIndex = {
-    GraftFunctions.register(corpus.sparkSession)
     val dim = Similarity.vecDim(corpus, vecCol)
     require(m >= 1 && dim % m == 0, s"dim $dim must be divisible by m=$m")
     val base = corpus.select(
@@ -263,7 +259,6 @@ object Pq {
   def ivfPqSegment(
       index: IvfPqIndex, newRows: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    GraftFunctions.register(newRows.sparkSession)
     newRows.select(
         col(idCol).as("id"),
         Similarity.requireDim(asDouble(col(vecCol)), index.dim).as("v"))
@@ -331,7 +326,6 @@ object Pq {
     require(index.data != null,
       "probe needs a full IvfPqIndex — this looks like a geometry-only read " +
         "(IndexStore.readIvfPqGeometry); load the store with readIvfPq")
-    GraftFunctions.register(queries.sparkSession)
     val centroids = index.centroids
     val probes = math.min(nProbe, centroids.size)
     val probeArr = slice(array_sort(array(centroids.zipWithIndex.map {

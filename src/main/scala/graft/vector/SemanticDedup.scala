@@ -41,7 +41,6 @@ object SemanticDedup {
       df: DataFrame, idCol: String, vecCol: String, tau: Double,
       numCells: Int = 64, lloydIters: Int = 2): DataFrame = {
     require(tau >= -1.0 && tau <= 1.0, s"tau must be a cosine in [-1,1]: $tau")
-    GraftFunctions.register(df.sparkSession)
     // empty corpus → empty pair set (dedup of nothing is nothing), not a
     // seed-centroid error; detected by the dim probe itself, so the
     // non-empty path pays no extra job
@@ -72,7 +71,6 @@ object SemanticDedup {
       centroids: IndexedSeq[Seq[Double]]): DataFrame = {
     require(tau >= -1.0 && tau <= 1.0, s"tau must be a cosine in [-1,1]: $tau")
     require(centroids.nonEmpty, "semanticPairsWith: empty centroid set")
-    GraftFunctions.register(df.sparkSession)
     val dimOpt = Similarity.vecDimOpt(df, vecCol)
     if (dimOpt.isEmpty)
       return df.select(col(idCol).as("id_a"), col(idCol).as("id_b"),

@@ -65,7 +65,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(
       col(queryIdCol).as("query_id"), asDouble(col(queryVecCol)).as("qv"))
     val scored = corpus
@@ -158,7 +157,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       L: Int = 32, bucketTarget: Int = 128,
       pOverride: Option[Int] = None, seed: Long = 42L): LshIndex = {
-    GraftFunctions.register(corpus.sparkSession)
     val dim = vecDim(corpus, vecCol)
     val p = pOverride.getOrElse {
       val n = corpus.count()
@@ -184,7 +182,6 @@ object Similarity {
   def lshSegment(
       index: LshIndex, newRows: DataFrame,
       idCol: String, vecCol: String): (DataFrame, DataFrame) = {
-    GraftFunctions.register(newRows.sparkSession)
     val vectors = newRows.select(
       col(idCol).as("id"),
       requireDim(asDouble(col(vecCol)), index.dim).as("v"))
@@ -246,7 +243,6 @@ object Similarity {
     require(index.banded != null && index.vectors != null,
       "probe needs a full index — this LshIndex is geometry-only " +
         "(IndexStore.readLshGeometry); load it with IndexStore.readLsh")
-    GraftFunctions.register(queries.sparkSession)
     val q0 = queries.select(
         col(queryIdCol).as("query_id"),
         requireDim(asDouble(col(queryVecCol)), index.dim).as("qv"))
@@ -325,7 +321,6 @@ object Similarity {
   def trainCentroids(
       corpus: DataFrame, idCol: String, vecCol: String, numCells: Int,
       lloydIters: Int = 2): IndexedSeq[Seq[Double]] = {
-    GraftFunctions.register(corpus.sparkSession)
     val dim = vecDim(corpus, vecCol)
     val base = corpus.select(
       col(idCol).as("id"), requireDim(asDouble(col(vecCol)), dim).as("v"))
@@ -428,7 +423,6 @@ object Similarity {
   def ivfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       numCells: Int = 64, lloydIters: Int = 2): IvfIndex = {
-    GraftFunctions.register(corpus.sparkSession)
     val dim = vecDim(corpus, vecCol)
     val base = corpus.select(
       col(idCol).as("id"), requireDim(asDouble(col(vecCol)), dim).as("v"))
@@ -472,7 +466,6 @@ object Similarity {
   def ivfSegment(
       index: IvfIndex, newRows: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    GraftFunctions.register(newRows.sparkSession)
     newRows.select(
         col(idCol).as("id"),
         requireDim(asDouble(col(vecCol)), index.dim).as("v"))
@@ -493,7 +486,6 @@ object Similarity {
     require(index.data != null,
       "probe needs a full index — this IvfIndex is geometry-only " +
         "(IndexStore.readIvfGeometry); load it with IndexStore.readIvf")
-    GraftFunctions.register(queries.sparkSession)
     val centroids = index.centroids
     // a tiny corpus may yield FEWER centroids than numCells — probe
     // count follows the actual centroid count, not the requested one
@@ -565,7 +557,6 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, useLsh: Boolean = false, p: Int = 8, L: Int = 8,
       seed: Long = 42L): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val dim = vecDim(df, vecCol)
     // persisted: both the LSH banding and the verify step scan `base`
     // more than once — without the cache the dim guard and the

@@ -31,7 +31,6 @@ class CellArgMaxSpec extends SparkSpec {
 
   test("tie rule and zero-norm convention match the composition") {
     initQuiet()
-    graft.GraftFunctions.register(spark)
     import spark.implicits._
     // centroid 1 and 2 are identical -> equal cosines, larger index
     // wins under greatest-struct ordering; the zero vector has cosine

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.{GraftFunctions, SparkSpec, Tables}
 import graft.functions.VectorFunctions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 class CosineSimilaritySpec extends SparkSpec {
@@ -16,7 +17,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("native expression matches the HOF composition to 1e-12") {
-    GraftFunctions.register(spark)
     val diff = pairs.select(
         (GraftFunctions.cosineSim(col("va"), col("vb")) -
           cosine(col("va"), col("vb"))).as("d"))
@@ -58,13 +58,21 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("extensions-injected session exposes cosine_sim without registration") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    // note: getOrCreate may return the shared session; registration via
-    // extensions still lands in its registry
+    // with no active or default session, getOrCreate builds a new session
+    // on the running context: builtins plus what the extension injects,
+    // none of the temp functions the cases above registered on `spark`
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = try SparkSession.builder()
+        .master("local[2]")
+        .withExtensions(new graft.GraftExtensions)
+        .getOrCreate()
+      finally {
+        SparkSession.setDefaultSession(shared)
+        SparkSession.setActiveSession(shared)
+      }
+    assert(s2 ne shared)
     val r = s2.sql("SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d))")
       .head.getDouble(0)
     assert(math.abs(r - 1.0) < 1e-15)

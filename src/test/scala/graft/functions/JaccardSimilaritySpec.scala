@@ -8,7 +8,6 @@ class JaccardSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("native jaccard matches the built-in intersect/union composition") {
-    GraftFunctions.register(spark)
     val docs = Tables.load(spark, sf, "documents").limit(50)
       .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
     val pairs = docs.select(col("doc_id").as("ida"), col("sh").as("a"))
@@ -24,7 +23,6 @@ class JaccardSimilaritySpec extends SparkSpec {
   }
 
   test("edge cases: identical, disjoint, empty") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (Seq("a", "b"), Seq("a", "b")),
       (Seq("a", "b"), Seq("c", "d")),

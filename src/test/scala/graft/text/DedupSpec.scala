@@ -19,7 +19,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native minhash signature is bit-identical to the HOF reference") {
-    graft.GraftFunctions.register(spark)
     val sh = docs.limit(50)
       .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
     val both = sh.select(
@@ -79,7 +78,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native simhash is bit-identical to the HOF reference") {
-    graft.GraftFunctions.register(spark)
     val both = docs.limit(50)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"),
@@ -101,7 +99,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash banding is complete for maxHamming > 3 (derived chunks)") {
-    graft.GraftFunctions.register(spark) // Dedup.simhash uses the native expr
     // ground truth: brute-force all-pairs Hamming over the same
     // fingerprints; id filter (not limit) so both plans see one row set
     val sampleDocs = docs.filter(col("doc_id") < 40)

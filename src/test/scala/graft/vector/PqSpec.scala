@@ -34,7 +34,6 @@ class PqSpec extends SparkSpec {
     }
 
   test("pq_encode matches the argmin-L2 reference, ties to smaller code") {
-    GraftFunctions.register(spark)
     val vs = Seq(
       Seq(0.9, 0.1, 2.9, 3.9),   // clear picks: (1, 2)
       Seq(0.0, 1.9, -0.9, 0.1),  // (2, 1)
@@ -53,7 +52,6 @@ class PqSpec extends SparkSpec {
   }
 
   test("pq_encode and pq_lut fail fast on a width-mismatched vector") {
-    GraftFunctions.register(spark)
     val bad = frame(Seq((1L, Seq(1.0, 2.0, 3.0))))
     def chainHas(t: Throwable, s: String): Boolean =
       t != null && (t.toString.contains(s) || chainHas(t.getCause, s))
@@ -68,7 +66,6 @@ class PqSpec extends SparkSpec {
   }
 
   test("pq_lut holds the per-subspace dots; adcDot == dot(q, decode)") {
-    GraftFunctions.register(spark)
     val q = Seq(1.0, 2.0, -1.0, 0.5)
     val luts = frame(Seq((1L, q)))
       .select(GraftFunctions.pqLut(col("v"), model.booksLit).as("lut"))
@@ -100,7 +97,6 @@ class PqSpec extends SparkSpec {
   }
 
   test("reconNorm2 matches |decode|^2; zero norms pin sim 0.0") {
-    GraftFunctions.register(spark)
     val schema = StructType(Seq(StructField("codes", ArrayType(IntegerType))))
     val jrows = new java.util.ArrayList[Row]()
     Seq(Seq(1, 2), Seq(0, 0), Seq(2, 1)).foreach(c => jrows.add(Row(c)))

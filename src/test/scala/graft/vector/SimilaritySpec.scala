@@ -125,7 +125,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("int8 quantization: bounded element error, cosine ~ 1, zero vector exact") {
-    graft.GraftFunctions.register(spark)
     val q = Similarity.quantizeInt8(emb, "embedding")
     // schema: tinyint codes + float scale (the 4x-at-rest contract)
     val qf = q.schema("q").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
