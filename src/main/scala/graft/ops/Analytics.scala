@@ -71,22 +71,21 @@ object Analytics {
     *
     * Shape: two keyed aggregation passes (medians are holistic — one
     * for the median, one for the MAD) with the group-cardinality-sized
-    * medians broadcast back between them. Exact `percentile` holds a
-    * per-group value buffer, fine for bounded groups; at unbounded
-    * group sizes pass `exact = false` for the mergeable
-    * `approx_percentile` sketch instead.
+    * medians broadcast back between them. Exact `percentile` holds one
+    * value→count map per group, so a group's memory is bounded by its
+    * number of DISTINCT values (and distinct absolute deviations), not
+    * by its rows.
     */
   def robustOutliers(
       df: DataFrame, groupCols: Seq[String], valueCol: String,
-      z: Double = 3.0, exact: Boolean = true): DataFrame = {
+      z: Double = 3.0): DataFrame = {
     require(groupCols.nonEmpty, "no group columns given")
-    val pct = if (exact) "percentile" else "approx_percentile"
     val gs = groupCols.map(col)
     val med = df.groupBy(gs: _*)
-      .agg(expr(s"$pct($valueCol, 0.5)").as("__med"))
+      .agg(expr(s"percentile($valueCol, 0.5)").as("__med"))
     val dev = df.join(broadcast(med), groupCols)
       .withColumn("__ad", abs(col(valueCol) - col("__med")))
-    val mad = dev.groupBy(gs: _*).agg(expr(s"$pct(__ad, 0.5)").as("__mad"))
+    val mad = dev.groupBy(gs: _*).agg(expr("percentile(__ad, 0.5)").as("__mad"))
     dev.join(broadcast(mad), groupCols)
       .groupBy(gs: _*)
       .agg(

@@ -1033,8 +1033,6 @@ object Behavior {
     "q235_auc" -> (aucQuery _),
     "q236_ece" -> (eceQuery _),
     "q237_gains" -> (gainsQuery _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twins for [[Behavior]] (driver correctness gate). */

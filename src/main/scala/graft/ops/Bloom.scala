@@ -111,8 +111,6 @@ object Bloom {
 
   val all: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q196_bloom_join" -> (query _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twin for [[Bloom]] (driver correctness gate): the plain

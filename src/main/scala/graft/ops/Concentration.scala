@@ -977,8 +977,6 @@ object Concentration {
     "q225_fertility" -> (fertilityQuery _),
     "q232_bursty_terms" -> (burstyTermsQuery _),
     "q238_price_dispersion" -> (priceDispersionQuery _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twins for [[Concentration]] (driver correctness gate). */

@@ -203,7 +203,7 @@ object Curation {
     * Production use is the approx aggregate alone — `exact_u` here is
     * the oracle's anchor.
     */
-  def approxDistinct(spark: SparkSession, dir: String): DataFrame =
+  def hllDistinctCheck(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "events")
       .groupBy(col("event_type"))
       .agg(
@@ -1013,20 +1013,18 @@ object Curation {
   /** Keep rows whose `valueCol` lies within the corpus's exact
     * [`lo`, `hi`] percentile band — outlier trimming for corpus
     * curation (truncated docs at the bottom, concatenation accidents at
-    * the top). Exact `percentile` is a sort-based aggregate — fine to a
-    * few hundred million rows; at 100 TB switch `exact=false` for the
-    * mergeable `approx_percentile` sketch (one pass, bounded memory,
-    * rank error ≤ 1/accuracy). Thresholds join back via broadcast — the
-    * corpus itself is never re-shuffled.
+    * the top). Exact `percentile` keeps one value→count map (map-side
+    * partials merged into one buffer), so its memory is bounded by the
+    * number of DISTINCT values of `valueCol`, not by rows: for a length
+    * column such as `n_chars` that is at most the longest document's
+    * length, whatever the corpus size. Thresholds join back via
+    * broadcast — the corpus itself is never re-shuffled.
     */
-  def quantileBand(
-      df: DataFrame, valueCol: String, lo: Double, hi: Double,
-      exact: Boolean = true): DataFrame = {
+  def quantileBand(df: DataFrame, valueCol: String, lo: Double, hi: Double): DataFrame = {
     require(lo >= 0 && hi <= 1 && lo <= hi, s"need 0 <= lo <= hi <= 1, got [$lo, $hi]")
-    val fn = if (exact) "percentile" else "approx_percentile"
     val b = df.agg(
-      expr(s"$fn($valueCol, $lo)").as("__lo"),
-      expr(s"$fn($valueCol, $hi)").as("__hi"))
+      expr(s"percentile($valueCol, $lo)").as("__lo"),
+      expr(s"percentile($valueCol, $hi)").as("__hi"))
     df.crossJoin(broadcast(b))
       .filter(col(valueCol) >= col("__lo") && col(valueCol) <= col("__hi"))
       .drop("__lo", "__hi")
@@ -2702,7 +2700,7 @@ object Curation {
     "q28_fingerprint" -> (fingerprintStats _),
     "q29_ann_topk" -> (annTopK _),
     "q30_mm_meta" -> (mmMeta _),
-    "q31_approx_distinct" -> (approxDistinct _),
+    "q31_approx_distinct" -> (hllDistinctCheck _),
     "q37_top_tokens" -> (topTokens _),
     "q40_frame_stats" -> (frameStats _),
     "q41_fuzzy_hist" -> (fuzzyHistogram _),
@@ -2770,6 +2768,4 @@ object Curation {
     "q249_token_budget" -> (tokenBudget _),
     "q250_embed_outliers" -> (embedOutliers _),
     "q251_pad_waste" -> (padWaste _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }

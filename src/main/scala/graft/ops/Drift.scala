@@ -27,56 +27,48 @@ import org.apache.spark.sql.functions._
   *  - [[winsorizedMeans]] / [[weightedMedianQuery]]: exact per-group
   *    percentiles are holistic (per-group distinct-value map in ONE
   *    aggregation buffer) — fine while value cardinality is bounded;
-  *    both now run behind the size-guarded [[PercentileMode]] switch
-  *    so a 100 TB caller cannot accidentally build an unbounded
-  *    in-memory map: over the bound, q116 swaps to the mergeable
-  *    `approx_percentile` sketch and q133 to the EXACT
-  *    cumulative-window form (spillable sort, O(1) per-row state).
+  *    both run behind the [[exactIsSafe]] size guard, so a 100 TB
+  *    caller cannot accidentally build an unbounded in-memory map:
+  *    over the bound, q116 swaps to the mergeable `approx_percentile`
+  *    sketch and q133 to the EXACT cumulative-window form (spillable
+  *    sort, O(1) per-row state).
   */
 object Drift {
 
-  /** How per-group percentiles execute.
+  /** Per-group percentile regimes. The holistic `percentile` aggregate
+    * keeps each group's distinct-value map in ONE aggregation buffer:
+    * fastest at bounded cardinality, memory grows with distinct values.
+    * The bounded-memory forms are `approx_percentile` (unweighted, at
+    * [[SketchAccuracy]]) and the exact cumulative-weight window
+    * (weighted). [[winsorizedMeans]] and [[weightedMedianQuery]] pick
+    * the regime from the data through [[exactIsSafe]], so a caller gets
+    * small-scale speed AND cannot OOM an executor at 100 TB.
     *
-    *  - [[PercentileMode.Exact]] — the holistic `percentile`
-    *    aggregate: per-group state is the distinct-value map. Fastest
-    *    at bounded cardinality; memory grows with distinct values.
-    *  - [[PercentileMode.Scalable]] — the bounded-memory form:
-    *    `approx_percentile` (unweighted) or the exact
-    *    cumulative-weight window (weighted).
-    *  - [[PercentileMode.Auto]] — DEFAULT: one cheap
-    *    `approx_count_distinct` guard pass picks Exact below
-    *    `maxDistinctPerGroup` distinct values per group and Scalable
-    *    above it, so the default caller gets small-scale speed AND
-    *    cannot OOM an executor at 100 TB. The guard runs one
-    *    two-column aggregate (mergeable sketch, map-side partials).
+    * 4M distinct longs per group ≈ tens of MB of aggregation buffer:
+    * comfortably inside an executor, far above any cents-grid
+    * cardinality seen at test scale.
     */
-  sealed trait PercentileMode
-  object PercentileMode {
-    case object Exact extends PercentileMode
-    /** `accuracy` only applies to the unweighted sketch path. */
-    final case class Scalable(accuracy: Int = 10000) extends PercentileMode
-    /** Default bound 4M distinct longs/group ≈ tens of MB of
-      * aggregation buffer — comfortably inside an executor, far above
-      * any cents-grid cardinality seen at test scale. */
-    final case class Auto(
-        maxDistinctPerGroup: Long = 4000000L,
-        accuracy: Int = 10000) extends PercentileMode
-  }
+  private val MaxDistinctPerGroup = 4000000L
 
-  /** Resolve [[PercentileMode.Auto]] against the observed data: true =
-    * take the exact holistic path. One approx_count_distinct guard job.
-    * The threshold is shaded to 90% of the bound: the sketch carries
-    * ~2–5% relative error and this check exists purely as an OOM
-    * guard, so a group moderately over the memory bound must never be
-    * routed to the unbounded holistic path by under-estimation. */
+  /** `approx_percentile` accuracy on the sketch regime. */
+  private val SketchAccuracy = 10000
+
+  /** True = the holistic path is safe on the observed data. One
+    * approx_count_distinct guard job (two-column aggregate, mergeable
+    * sketch, map-side partials). The threshold is shaded to 90% of
+    * [[MaxDistinctPerGroup]]: the sketch carries ~2–5% relative error
+    * and this check exists purely as an OOM guard, so a group
+    * moderately over the memory bound must never be routed to the
+    * unbounded holistic path by under-estimation. */
   private def exactIsSafe(
-      pairs: DataFrame, keyCol: String, valueCol: String, bound: Long): Boolean = {
+      pairs: DataFrame, keyCol: String, valueCol: String): Boolean = {
     val worst = pairs
       .groupBy(col(keyCol))
       .agg(approx_count_distinct(col(valueCol)).as("__d"))
       .agg(max(col("__d")).as("__m"))
       .head()
-    worst.isNullAt(0) || worst.getLong(0) <= bound - bound / 10
+    worst.isNullAt(0) ||
+      worst.getLong(0) <= MaxDistinctPerGroup - MaxDistinctPerGroup / 10
   }
 
   private def orderedSmall(df: DataFrame, cols: Column*): DataFrame =
@@ -203,32 +195,37 @@ object Drift {
     * runs on BIGINTs, and each mean is one division of an exact sum.
     * Two passes over the group: a percentile aggregate broadcast
     * back, then one algebraic aggregate. The percentile pass runs
-    * behind the [[PercentileMode]] size guard: exact holistic below
-    * the distinct-value bound, `approx_percentile` (mergeable sketch,
-    * same call shape; cut values approximate, clamp+means still exact
+    * behind the [[exactIsSafe]] size guard: exact holistic below the
+    * distinct-value bound, `approx_percentile` (mergeable sketch, same
+    * call shape; cut values approximate, clamp+means still exact
     * integers against those cuts) above it.
     */
   def winsorizedMeans(
       df: DataFrame, keyCol: String, valueCol: String,
-      pLo: Double, pHi: Double,
-      mode: PercentileMode = PercentileMode.Auto()): DataFrame = {
+      pLo: Double, pHi: Double): DataFrame = {
     require(0 <= pLo && pLo < pHi && pHi <= 1, s"need 0<=pLo<pHi<=1: $pLo, $pHi")
+    winsorizedMeansWith(df, keyCol, valueCol, pLo, pHi,
+      holistic = exactIsSafe(cents(df, keyCol, valueCol), keyCol, "__c"))
+  }
+
+  private def cents(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
+    df.select(col(keyCol), round(col(valueCol) * 100).cast("long").as("__c"))
+
+  /** [[winsorizedMeans]] in a resolved regime: holistic `percentile`
+    * cuts, or `approx_percentile` ones. */
+  private[ops] def winsorizedMeansWith(
+      df: DataFrame, keyCol: String, valueCol: String,
+      pLo: Double, pHi: Double, holistic: Boolean): DataFrame = {
     val k = col(keyCol)
-    val cents = df.select(k, round(col(valueCol) * 100).cast("long").as("__c"))
-    val (useExact, accuracy) = mode match {
-      case PercentileMode.Exact => (true, 0)
-      case PercentileMode.Scalable(a) => (false, a)
-      case PercentileMode.Auto(bound, a) =>
-        (exactIsSafe(cents, keyCol, "__c", bound), a)
-    }
+    val c = cents(df, keyCol, valueCol)
     val cuts =
-      if (useExact) cents.groupBy(k).agg(
+      if (holistic) c.groupBy(k).agg(
         round(expr(s"percentile(__c, $pLo)")).cast("long").as("__lo"),
         round(expr(s"percentile(__c, $pHi)")).cast("long").as("__hi"))
-      else cents.groupBy(k).agg(
-        round(expr(s"approx_percentile(__c, $pLo, $accuracy)")).cast("long").as("__lo"),
-        round(expr(s"approx_percentile(__c, $pHi, $accuracy)")).cast("long").as("__hi"))
-    cents.join(broadcast(cuts), keyCol)
+      else c.groupBy(k).agg(
+        round(expr(s"approx_percentile(__c, $pLo, $SketchAccuracy)")).cast("long").as("__lo"),
+        round(expr(s"approx_percentile(__c, $pHi, $SketchAccuracy)")).cast("long").as("__hi"))
+    c.join(broadcast(cuts), keyCol)
       .withColumn("__w", least(greatest(col("__c"), col("__lo")), col("__hi")))
       .groupBy(k)
       .agg(count(lit(1)).as("n"),
@@ -1156,7 +1153,7 @@ object Drift {
     * engines interpolate over the identical multiset. Weights are
     * integral by corpus construction; the cast is exact.
     *
-    * Percentiles run behind the [[PercentileMode]] size guard
+    * Percentiles run behind a row-count and [[exactIsSafe]] size guard
     * (round-7: previously always holistic — the 57 s/100× heavy tail):
     * below the distinct-value bound, Spark's holistic 3-arg
     * `percentile` (fast single aggregate — the regime at every test
@@ -1165,10 +1162,15 @@ object Drift {
     * formula, but spillable-window memory instead of an unbounded
     * per-group value map.
     */
-  def weightedMedianQuery(spark: SparkSession, dir: String): DataFrame =
-    weightedMedian(spark, dir, PercentileMode.Auto())
+  def weightedMedianQuery(spark: SparkSession, dir: String): DataFrame = {
+    val li = weightedPrices(spark, dir)
+    // rows first (cheap count, short-circuits the sketch job at scale),
+    // then the distinct-value OOM guard
+    weightedMedian(spark, dir, holistic = li.count() <= HolisticWeightedMaxRows &&
+      exactIsSafe(li, "l_returnflag", "l_extendedprice"))
+  }
 
-  /** Row-count crossover for [[weightedMedian]]'s Auto resolution (r12,
+  /** Row-count crossover for [[weightedMedianQuery]]'s regime (r12,
     * guide §1.2 "per-task work"): the holistic `percentile` updates a
     * per-group value map per ROW — measured at amp100 (QTIME_STAGES):
     * 2 112 executor-seconds over 60.7 M rows ≈ 35 µs/row, plus a
@@ -1188,22 +1190,18 @@ object Drift {
     */
   val HolisticWeightedMaxRows = 2000000L
 
-  def weightedMedian(
-      spark: SparkSession, dir: String, mode: PercentileMode): DataFrame = {
-    val li = Tables.load(spark, dir, "lineitem")
+  private def weightedPrices(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice"),
         col("l_quantity").cast("long").as("__q"))
-    val useExact = mode match {
-      case PercentileMode.Exact => true
-      case PercentileMode.Scalable(_) => false
-      case PercentileMode.Auto(bound, _) =>
-        // rows first (cheap count, short-circuits the sketch job at
-        // scale), then the distinct-value OOM guard
-        li.count() <= HolisticWeightedMaxRows &&
-          exactIsSafe(li, "l_returnflag", "l_extendedprice", bound)
-    }
+
+  /** q133 in a resolved regime: the holistic 3-arg `percentile`, or
+    * [[weightedPercentilesScalable]]. */
+  private[ops] def weightedMedian(
+      spark: SparkSession, dir: String, holistic: Boolean): DataFrame = {
+    val li = weightedPrices(spark, dir)
     val out =
-      if (useExact)
+      if (holistic)
         li.groupBy(col("l_returnflag"))
           .agg(
             count(lit(1)).as("n_rows"),
@@ -1581,8 +1579,6 @@ object Drift {
             round(col("l_extendedprice") * 100).cast("long").as("cents")),
         Seq("l_returnflag", "l_linestatus"), "cents", 100.0),
       col("l_returnflag"), col("l_linestatus"))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twins for [[Drift]] (driver correctness gate). */

@@ -438,8 +438,6 @@ object Graph {
 
   // --------------------------------------------------------------- q111
 
-  /** q111 — winnowed near-dup candidates: document pairs sharing ≥ 3
-    * rare winnowing fingerprints (k=4, w=8, df cap 10%). */
   /** Top-`topK` winnowing pairs with exact-duplicate classes collapsed
     * BEFORE the pair machinery ([[graft.text.Dedup.exactClassAgg]]):
     * fingerprints are text-functional, so the rare-fingerprint
@@ -531,6 +529,8 @@ object Graph {
       .limit(topK)
   }
 
+  /** q111 — winnowed near-dup candidates: document pairs sharing ≥ 3
+    * rare winnowing fingerprints (k=4, w=8, df cap 10%). */
   def winnowQuery(spark: SparkSession, dir: String): DataFrame =
     winnowTopPairs(Tables.load(spark, dir, "documents"),
       "doc_id", "text", k = 4, w = 8, minShared = 3L,
@@ -624,8 +624,6 @@ object Graph {
     "q202_hits" -> (hitsQuery _),
     "q203_clustering" -> (clusteringQuery _),
     "q211_assortativity" -> (assortativityQuery _))
-
-  val allNames: Seq[String] = all.map(_._1)
 
   // --------------------------------------------------------------- q202
 

@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   *    portable md5 variant is the one under the DuckDB oracle.
   *  - [[profile]] is one aggregate pass; exact `count(DISTINCT)` over
   *    many columns plans through Catalyst's Expand (one shuffle, data
-  *    duplicated per distinct-column) — at extreme widths switch
-  *    `approxDistinct = true` for one sketch per column instead.
+  *    duplicated once per profiled column).
   */
 object Integrity {
 
@@ -63,16 +62,15 @@ object Integrity {
   }
 
   /** Long-format column profile: per column — row count, null count,
-    * exact (or approximate) distinct count, min/max rendered as
-    * strings. One aggregate pass over the table.
+    * exact distinct count, min/max rendered as strings. One aggregate
+    * pass over the table.
     */
-  def profile(df: DataFrame, cols: Seq[String], approxDistinct: Boolean = false): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "no columns given")
     val aggs = cols.flatMap { c =>
       Seq(
         count(col(c)).as(s"__cnt_$c"),
-        (if (approxDistinct) approx_count_distinct(col(c)) else countDistinct(col(c)))
-          .as(s"__nd_$c"),
+        countDistinct(col(c)).as(s"__nd_$c"),
         min(col(c)).cast("string").as(s"__min_$c"),
         max(col(c)).cast("string").as(s"__max_$c"))
     }
@@ -715,8 +713,6 @@ object Integrity {
     "q207_linear_counting" -> (linearCounting _),
     "q210_rapid_repeats" -> (rapidRepeatScreen _),
     "q213_capture_recapture" -> (captureRecapture _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twins for [[Integrity]] (driver correctness gate). */

@@ -238,8 +238,6 @@ object Ledger {
     "q184_capped_balance" -> (cappedBalanceQuery _),
     "q214_unit_value_index" -> (unitValueIndexQuery _),
     "q242_ending_inventory" -> (endingInventoryQuery _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twins for [[Ledger]] (driver correctness gate). */

@@ -252,8 +252,6 @@ object Recommend {
     "q192_coverage" -> (coverageQuery _),
     "q222_wilson_rank" -> (wilsonQuery _),
     "q230_eb_shrinkage" -> (ebShrinkQuery _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twins for [[Recommend]] (driver correctness gate). */

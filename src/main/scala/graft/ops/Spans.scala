@@ -307,8 +307,6 @@ object Spans {
     "q131_bounce_rate" -> (bounceQuery _),
     "q176_interval_union" -> (intervalUnionQuery _),
     "q216_up_streak" -> (upStreakQuery _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twins for [[Spans]] (driver correctness gate). */

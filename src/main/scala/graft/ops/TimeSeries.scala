@@ -526,8 +526,6 @@ object TimeSeries {
     "q223_var_cvar" -> (varQuery _),
     "q224_mase_backtest" -> (maseQuery _),
     "q241_seasonality_strength" -> (seasonalityStrengthQuery _))
-
-  val allNames: Seq[String] = all.map(_._1)
 }
 
 /** DuckDB twins for [[TimeSeries]] (driver correctness gate). */

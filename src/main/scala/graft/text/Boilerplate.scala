@@ -22,14 +22,8 @@ import org.apache.spark.sql.functions._
   *     Catalyst/AQE rather than pinning a hint.
   *  3. Per-document coverage is a second keyed aggregate on the doc id.
   *
-  * With `hashKeys = true` the join/shuffle key is `xxhash64(ngram)`
-  * (8 bytes) instead of the n-gram string — the same trick as
-  * decontamination's `hashKeys` — cutting shuffle bytes several-fold at
-  * corpus scale. Collision risk for v distinct n-grams is ≈ v²/2⁶⁵
-  * (~3·10⁻⁷ at v = 3·10⁶; ~0.003 at v = 3·10⁸): a collision can only
-  * over-count a document's coverage, never crash. The oracle-checked
-  * query keeps `hashKeys = false` so DuckDB replays string keys
-  * verbatim.
+  * Every shuffle and join is keyed by the n-gram string itself, so
+  * coverage is exact (no hash collision can over-count a document).
   */
 object Boilerplate {
 
@@ -45,16 +39,11 @@ object Boilerplate {
 
   /** Document frequency of every n-gram: one row per distinct n-gram
     * with the count of distinct documents containing it. One shuffle
-    * (see object scaladoc). Output: (`ngram`, `df`) — `ngram` is the
-    * string when `hashKeys = false`, else its xxhash64.
+    * (see object scaladoc). Output: (`ngram`, `df`).
     */
-  def docFrequency(df: DataFrame, textCol: String, n: Int,
-      hashKeys: Boolean = false): DataFrame = {
-    val ng = explode(array_distinct(ngrams(col(textCol), n))).as("_ng")
-    val keyed = df.select(ng)
-      .select((if (hashKeys) xxhash64(col("_ng")) else col("_ng")).as("ngram"))
-    keyed.groupBy(col("ngram")).agg(count(lit(1)).as("df"))
-  }
+  def docFrequency(df: DataFrame, textCol: String, n: Int): DataFrame =
+    df.select(explode(array_distinct(ngrams(col(textCol), n))).as("ngram"))
+      .groupBy(col("ngram")).agg(count(lit(1)).as("df"))
 
   /** Per-document boilerplate coverage: for each document with at least
     * `n` tokens, the total n-gram position count and how many of those
@@ -66,19 +55,16 @@ object Boilerplate {
     * are excluded (consistent with the oracle).
     */
   def coverage(df: DataFrame, idCol: String, textCol: String, n: Int,
-      minDf: Int, carryCols: Seq[String] = Nil,
-      hashKeys: Boolean = false): DataFrame = {
+      minDf: Int, carryCols: Seq[String] = Nil): DataFrame = {
     require(n >= 1, s"n must be >= 1: $n")
     require(minDf >= 2, s"minDf < 2 marks every n-gram boilerplate: $minDf")
-    val bp = docFrequency(df, textCol, n, hashKeys)
+    val bp = docFrequency(df, textCol, n)
       .filter(col("df") >= minDf)
       .select(col("ngram"), lit(1).as("_isbp"))
-    val key = (c: Column) => if (hashKeys) xxhash64(c) else c
     val positions = df
       .filter(size(split(col(textCol), " ")) >= n)
       .select((col(idCol) +: carryCols.map(col)) :+
-        explode(ngrams(col(textCol), n)).as("_pos"): _*)
-      .select((col(idCol) +: carryCols.map(col)) :+ key(col("_pos")).as("ngram"): _*)
+        explode(ngrams(col(textCol), n)).as("ngram"): _*)
     positions.join(bp, Seq("ngram"), "left")
       .groupBy(col(idCol) +: carryCols.map(col): _*)
       .agg(count(lit(1)).as("positions"), count(col("_isbp")).as("bp_positions"))
@@ -97,15 +83,12 @@ object Boilerplate {
     * so the intermediate is document-sized, never corpus-sized.
     */
   def scrub(df: DataFrame, idCol: String, textCol: String, n: Int,
-      minDf: Int, outCol: String = "text_scrubbed",
-      hashKeys: Boolean = false): DataFrame = {
-    val bp = docFrequency(df, textCol, n, hashKeys)
+      minDf: Int, outCol: String = "text_scrubbed"): DataFrame = {
+    val bp = docFrequency(df, textCol, n)
       .filter(col("df") >= minDf)
       .select(col("ngram"), lit(1).as("_isbp"))
-    val key = (c: Column) => if (hashKeys) xxhash64(c) else c
     val starts = df
-      .select(col(idCol), posexplode(ngrams(col(textCol), n)).as(Seq("_s", "_ng")))
-      .select(col(idCol), col("_s"), key(col("_ng")).as("ngram"))
+      .select(col(idCol), posexplode(ngrams(col(textCol), n)).as(Seq("_s", "ngram")))
       .join(bp, Seq("ngram"), "left")
       .filter(col("_isbp").isNotNull)
       .groupBy(col(idCol)).agg(sort_array(collect_list(col("_s"))).as("_starts"))

@@ -394,50 +394,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** Exact n-gram Jaccard similarity for all pairs above `threshold`.
-    * Token-inverted-index join: explode shingles, join on shingle, count
-    * shared shingles per pair, compute |A∩B|/|A∪B|. One shuffle on the
-    * shingle key — no O(n²) cross join; hot shingles can be frequency-
-    * capped upstream (stopword-like shingles carry no dedup signal).
-    */
-  /** [[ngramJaccard]] with a document-frequency cap on the inverted
-    * index — the 100 TB form. Stopword-like shingles appearing in more
-    * than `maxDocFreq` docs are excluded from CANDIDATE GENERATION
-    * (their postings lists are quadratic pair bombs and carry no dedup
-    * signal); candidates are then re-verified with EXACT Jaccard over
-    * the full shingle sets, so reported similarities are uncapped and
-    * exact. Recall loss is confined to pairs whose overlap is ONLY hot
-    * shingles — which a `threshold` worth using excludes anyway
-    * (equality with the uncapped operator on the corpus is
-    * test-asserted at cap = 100).
-    */
-  def ngramJaccardCapped(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleLen: Int = 3,
-      threshold: Double = 0.5,
-      maxDocFreq: Long = 1000): DataFrame = {
-    val sh = shingleTable(df, idCol, textCol, shingleLen)
-    val inv = sh.select(col("id"), explode(col("sh")).as("s"))
-    val cold = inv.groupBy(col("s"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDocFreq)
-      .select(col("s"))
-    val coldInv = inv.join(cold, Seq("s"))
-    val cand = coldInv.select(col("s"), col("id").as("id_a"))
-      .join(coldInv.select(col("s"), col("id").as("id_b")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    cand
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard", graft.GraftFunctions.jaccardSim(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
-
   /** Prefix-filtered exact Jaccard pairs (the PPJoin principle):
     * identical output to [[ngramJaccard]], but the inverted index
     * holds only each document's PREFIX — its first
@@ -662,11 +618,9 @@ object Dedup {
     * docs, ≪ corpus), so its distinct n-gram set is BROADCAST and the
     * contaminated-id set (⊆ pair hits) is broadcast back for the anti
     * join — the corpus is never shuffled by n-gram; contamination
-    * detection is one scan-side pass over the corpus shingles.
-    * `hashKeys=true` broadcasts 8-byte `xxhash64` keys instead of
-    * n-gram strings (the 100 TB form — an order of magnitude smaller
-    * broadcast); a hash collision can only FALSE-POSITIVE a removal
-    * (never leak a true contamination) at ~2^-64 per pair.
+    * detection is one scan-side pass over the corpus shingles. The
+    * broadcast keys are the n-gram strings themselves, so a removal is
+    * never a hash false positive.
     *
     * Docs shorter than `n` tokens shingle to the whole doc
     * ([[shingleTable]] semantics), so short benchmark items
@@ -678,12 +632,7 @@ object Dedup {
       benchmark: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 8,
-      hashKeys: Boolean = false): DataFrame = {
-    def keyed(df: DataFrame): DataFrame =
-      if (hashKeys) df.select(df.columns.filter(_ != "s").map(col) :+
-        xxhash64(col("s")).as("k"): _*)
-      else df.withColumnRenamed("s", "k")
+      n: Int = 8): DataFrame = {
     // r11: the bench gram set only needs each DISTINCT bench text once
     // (the set union is text-functional); the synthetic xxhash64 id
     // exists purely so shingleTable can spread rows — it never reaches
@@ -691,8 +640,8 @@ object Dedup {
     val benchTexts = benchmark.select(col(textCol)).distinct()
       .withColumn("__bid", xxhash64(col(textCol)))
     val benchKeys = broadcast(
-      keyed(shingleTable(benchTexts, "__bid", textCol, n)
-        .select(explode(col("sh")).as("s")))
+      shingleTable(benchTexts, "__bid", textCol, n)
+        .select(explode(col("sh")).as("s"))
         .distinct())
     // r11 collapse-first (guide §2.3): contamination is text-functional,
     // so the n-gram pass runs over ONE representative per exact-
@@ -704,11 +653,10 @@ object Dedup {
     // text — the corpus is still never shuffled.
     val frame = exactClassAgg(
       corpus.select(col(idCol), col(textCol)), idCol, textCol)
-    val contaminatedTexts = keyed(
-        shingleTable(frame.select(col("__cls").as(idCol), col(textCol)),
-          idCol, textCol, n)
-          .select(col("id"), explode(col("sh")).as("s")))
-      .join(benchKeys, Seq("k"), "left_semi")
+    val contaminatedTexts = shingleTable(
+        frame.select(col("__cls").as(idCol), col(textCol)), idCol, textCol, n)
+      .select(col("id"), explode(col("sh")).as("s"))
+      .join(benchKeys, Seq("s"), "left_semi")
       .select(col("id")).distinct()
       .join(frame.select(col("__cls").as("id"), col(textCol)), Seq("id"))
       .select(col(textCol))
@@ -764,29 +712,25 @@ object Dedup {
     * corpus docs share an n-gram with it (which eval items leak most,
     * how bad, and whether a single boilerplate question is inflating
     * the purge). Same broadcast shape as the purge: the corpus streams
-    * through one scan-side shingle join, never shuffled by n-gram —
-    * and the same `hashKeys` option (broadcast 8-byte xxhash64 keys
-    * instead of n-gram strings, the 100 TB form; a collision only
-    * inflates a count at ~2⁻⁶⁴ per pair).
+    * through one scan-side shingle join, never shuffled by n-gram, and
+    * the broadcast keys are the n-gram strings, so no count is
+    * inflated by a hash collision.
     */
   def contaminationReport(
       corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, n: Int = 8,
-      hashKeys: Boolean = false): DataFrame = {
-    def keyed(df: DataFrame): DataFrame =
-      if (hashKeys) df.withColumn("s", xxhash64(col("s"))) else df
-    val benchSh = broadcast(keyed(
+      idCol: String, textCol: String, n: Int = 8): DataFrame = {
+    val benchSh = broadcast(
       shingleTable(benchmark, idCol, textCol, n)
-        .select(col("id").as("bench_id"), explode(col("sh")).as("s"))))
+        .select(col("id").as("bench_id"), explode(col("sh")).as("s")))
     // r11 collapse-first, as in [[decontaminate]]: hits are counted at
     // the exact-duplicate-class grain (one shingle pass per distinct
     // text) and n_docs recovers exactly as the multiplicity sum over a
     // bench item's distinct contaminated classes.
     val frame = exactClassAgg(
       corpus.select(col(idCol), col(textCol)), idCol, textCol)
-    keyed(shingleTable(frame.select(col("__cls").as(idCol), col(textCol)),
-        idCol, textCol, n)
-        .select(col("id"), explode(col("sh")).as("s")))
+    shingleTable(
+        frame.select(col("__cls").as(idCol), col(textCol)), idCol, textCol, n)
+      .select(col("id"), explode(col("sh")).as("s"))
       .join(benchSh, Seq("s"))
       .select(col("bench_id"), col("id")).distinct()
       .join(frame.select(col("__cls").as("id"), col("__m")), Seq("id"))
@@ -794,6 +738,12 @@ object Dedup {
       .agg(sum(col("__m")).as("n_docs"))
   }
 
+  /** Exact n-gram Jaccard similarity for all pairs above `threshold`.
+    * Token-inverted-index join: explode shingles, join on shingle, count
+    * shared shingles per pair, compute |A∩B|/|A∪B|. One shuffle on the
+    * shingle key — no O(n²) cross join; hot shingles can be frequency-
+    * capped upstream (stopword-like shingles carry no dedup signal).
+    */
   def ngramJaccard(
       df: DataFrame,
       idCol: String,

@@ -202,8 +202,8 @@ object ScaleCheck {
     // over one vector per exact-duplicate class — its all-pairs side is
     // bounded by DISTINCT content, which is what lets it run at 100×
     // where q26 cannot; on a corpus whose distinct-vector count scales,
-    // the at-scale path is nearDupCosine(useLsh = true), as q26's own
-    // scaladoc prescribes. (This entry landed one run late: the r9
+    // the at-scale path is lshIndex + annTopK, as q26's operator
+    // (nearDupCosine) scaladoc prescribes. (This entry landed one run late: the r9
     // SCALE sweeps flagged q266 on stderr before it was allowlisted —
     // the artifact rows themselves are unaffected.)
     // q270 (r11) is the same contract at the CODED grain: pqScanTopK is

@@ -41,7 +41,7 @@ object ScaleRun {
     timeIt("decontaminate_exact") {
       val bench = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
       Dedup.decontaminate(docs.filter(pmod(col("doc_id"), lit(7)) =!= 0),
-        bench, "doc_id", "text", n = 8, hashKeys = true).count()
+        bench, "doc_id", "text", n = 8).count()
     }
     timeIt("decontaminate_fuzzy") {
       val bench = docs.filter(pmod(col("doc_id"), lit(7)) === 0)

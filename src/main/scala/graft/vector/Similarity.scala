@@ -514,17 +514,6 @@ object Similarity {
       .select(col("query_id"), col("id"), col("sim"), col("rk"))
   }
 
-  /** Embedding near-duplicate pairs: all (a<b) pairs with cosine ≥ τ.
-    *
-    * Exact form is a broadcast cross-join (corpus must be broadcastable —
-    * the oracle-checked q26 path at test scale). The scale path
-    * (`useLsh`) is the same multi-table (p, L) construction as
-    * [[annTopK]]: candidates are pairs co-bucketed in ≥1 of L tables,
-    * and only (id, table, code) flows through the self-join — vectors
-    * re-attach to the collision-rate-sized candidate set. For true
-    * near-dups (τ ≥ 0.9 ⇒ θ ≤ 26°) per-table collision is
-    * (1−θ/π)^p ≈ 0.3 at p=8, so L=8 tables give ≈ 94% recall.
-    */
   /** Per-vector symmetric int8 scalar quantization: `q_i = round(v_i/s)`
     * with `s = max|v| / 127`, stored as (`array<tinyint>`, float scale) —
     * 4× smaller than float32 at rest AND on the wire, which at 100 TB is
@@ -553,35 +542,22 @@ object Similarity {
   def dequantizeInt8(qCol: Column, scaleCol: Column): Column =
     transform(qCol, x => (x.cast("double") * scaleCol.cast("double")).cast("float"))
 
+  /** Embedding near-duplicate pairs: all (a<b) pairs with cosine ≥ τ.
+    *
+    * Exact: a broadcast cross-join, so the corpus must be broadcastable
+    * (the oracle-checked q26 path). One side is broadcast and the scan
+    * side stays partitioned — no single-key shuffle hotspot. Past a
+    * broadcastable corpus, [[lshIndex]] + [[annTopK]] are the LSH path.
+    */
   def nearDupCosine(
-      df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, useLsh: Boolean = false, p: Int = 8, L: Int = 8,
-      seed: Long = 42L): DataFrame = {
+      df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
     val dim = vecDim(df, vecCol)
-    // persisted: both the LSH banding and the verify step scan `base`
-    // more than once — without the cache the dim guard and the
-    // L×p-dot-product code array recompute per scan (the dominant
-    // per-row cost).
+    // persisted: the cross-join scans `base` on both sides — without
+    // the cache the dim guard recomputes per scan
     val base = graft.CacheScope.keep(
       df.select(col(idCol).as("id"), requireDim(asDouble(col(vecCol)), dim).as("v")))
-    val pairs =
-      if (useLsh) {
-        val codes = array((0 until L).map(t => bucketCode(col("v"), dim, p, seed + t * 7919L)): _*)
-        val banded = base.select(col("id"), posexplode(codes).as(Seq("table", "code")))
-        val cand = banded.select(col("table"), col("code"), col("id").as("id_a"))
-          .join(banded.select(col("table"), col("code"), col("id").as("id_b")), Seq("table", "code"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"))
-          .dropDuplicates("id_a", "id_b")
-        cand
-          .join(base.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
-          .join(base.select(col("id").as("id_b"), col("v").as("vb")), Seq("id_b"))
-      } else {
-        // exact: one side broadcast, the scan side stays partitioned —
-        // no single-key shuffle hotspot
-        base.select(col("id").as("id_a"), col("v").as("va"))
-          .crossJoin(broadcast(base.select(col("id").as("id_b"), col("v").as("vb"))))
-      }
+    val pairs = base.select(col("id").as("id_a"), col("v").as("va"))
+      .crossJoin(broadcast(base.select(col("id").as("id_b"), col("v").as("vb"))))
     // threshold on the UNROUNDED cosine (matches the oracle's WHERE,
     // which filters before any rounding); round only in the projection —
     // otherwise a pair with true sim in [threshold−5e-7, threshold) is

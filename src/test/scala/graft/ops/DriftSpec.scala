@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hand-computable pins for the sequential-statistics family
@@ -112,28 +113,31 @@ class DriftSpec extends SparkSpec {
     // other: the cumulative-window form mirrors the holistic
     // percentile's interpolation formula, so at 4-decimal rounding
     // the outputs must be identical row-for-row
-    def rows(m: Drift.PercentileMode) =
-      Drift.weightedMedian(spark, sf, m).collect()
+    def rows(df: DataFrame) =
+      df.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq
-    val exact = rows(Drift.PercentileMode.Exact)
-    val scal = rows(Drift.PercentileMode.Scalable())
+    val exact = rows(Drift.weightedMedian(spark, sf, holistic = true))
+    val scal = rows(Drift.weightedMedian(spark, sf, holistic = false))
     assert(exact == scal, s"regimes diverged:\n$exact\n$scal")
-    // Auto at test sf resolves to Exact (cents grid ≪ 4M distinct)
-    assert(rows(Drift.PercentileMode.Auto()) == exact)
+    // the public query resolves to the holistic regime at test sf
+    // (rows ≪ HolisticWeightedMaxRows, cents grid ≪ 4M distinct)
+    assert(rows(Drift.weightedMedianQuery(spark, sf)) == exact)
 
     // q116 winsorize — the sketch regime approximates the CUTS but
     // keeps exact clamp arithmetic; at accuracy 10000 over ~1500
     // orders the cuts land within a tight band of the exact ones
-    import org.apache.spark.sql.functions.col
     val orders = graft.Tables.load(spark, sf, "orders")
-    def w(m: Drift.PercentileMode) =
-      Drift.winsorizedMeans(orders, "o_orderpriority", "o_totalprice",
-          0.05, 0.95, m).collect()
-        .map(r => r.getString(0) -> r).toMap
-    val we = w(Drift.PercentileMode.Exact)
-    val ws = w(Drift.PercentileMode.Scalable())
+    def w(df: DataFrame) =
+      df.collect().map(r => r.getString(0) -> r).toMap
+    val we = w(Drift.winsorizedMeansWith(orders, "o_orderpriority", "o_totalprice",
+      0.05, 0.95, holistic = true))
+    val ws = w(Drift.winsorizedMeansWith(orders, "o_orderpriority", "o_totalprice",
+      0.05, 0.95, holistic = false))
     assert(we.keySet == ws.keySet)
+    // and the public call resolves to the holistic regime at test sf
+    assert(w(Drift.winsorizedMeans(orders, "o_orderpriority", "o_totalprice",
+      0.05, 0.95)) == we)
     we.foreach { case (k, e) =>
       val s = ws(k)
       assert(e.getLong(1) == s.getLong(1)) // n identical

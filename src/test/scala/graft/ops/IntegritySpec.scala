@@ -98,14 +98,6 @@ class IntegritySpec extends SparkSpec {
       (4L, "removed"), (5L, "added")))
   }
 
-  test("profile: approxDistinct mode stays within HLL error on the corpus") {
-    val docs = graft.Tables.load(spark, sf, "documents")
-    val exact = Integrity.profile(docs, Seq("source")).head().getLong(3)
-    val approx = Integrity.profile(docs, Seq("source"), approxDistinct = true)
-      .head().getLong(3)
-    assert(math.abs(approx - exact).toDouble / exact < 0.1)
-  }
-
   test("fdAudit: one row per declared FD, shares in [0,1]") {
     val rows = Integrity.fdAudit(spark, sf).collect()
     assert(rows.length == 4)

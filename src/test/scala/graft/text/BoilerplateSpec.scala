@@ -52,14 +52,6 @@ class BoilerplateSpec extends SparkSpec {
     assert(out(4L) == "aa bb")       // short doc passes through whole
   }
 
-  test("hashKeys path is equivalent at collision-free scale") {
-    val docs = graft.Tables.load(spark, sf, "documents")
-    val a = Boilerplate.coverage(docs, "doc_id", "text", 3, 3).orderBy("doc_id").collect()
-    val b = Boilerplate.coverage(docs, "doc_id", "text", 3, 3, hashKeys = true)
-      .orderBy("doc_id").collect()
-    assert(a.sameElements(b))
-  }
-
   test("coverage guards") {
     intercept[IllegalArgumentException](
       Boilerplate.coverage(corpus, "doc_id", "text", n = 0, minDf = 3))

@@ -20,32 +20,6 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.8, s"recall@5 = $recall")
   }
 
-  test("near-dup cosine LSH finds planted near-identical vectors") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    // plant 10 near-dups: copy a vector, nudge one component
-    val rows = emb.limit(10).collect().map { r =>
-      val v = r.getSeq[Float](1).toArray
-      v(0) = v(0) + 0.01f
-      Row(r.getLong(0) + 100000L, v.toSeq, r.getInt(2))
-    }
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val planted = spark.createDataFrame(
-      new java.util.ArrayList[Row](java.util.Arrays.asList(rows: _*)), schema)
-    val corpus = emb.unionByName(planted)
-
-    val lsh = Similarity.nearDupCosine(corpus, "vec_id", "embedding", 0.99, useLsh = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val found = lsh.count { case (a, b) => b - a == 100000L }
-    assert(found >= 9, s"LSH found only $found of 10 planted near-dups")
-    // and the LSH pair set is a subset of the exact pair set
-    val exact = Similarity.nearDupCosine(corpus, "vec_id", "embedding", 0.99)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lsh.subsetOf(exact))
-  }
-
   test("IVF recall@5 >= 0.8 vs brute force over 20 queries") {
     val queries = emb.filter(col("vec_id") < 20)
     val corpus = emb.filter(col("vec_id") >= 20)
@@ -80,7 +54,7 @@ class SimilaritySpec extends SparkSpec {
       (2L, Array(0.0f, 1.0f, 0.0f)),
       (3L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
     val e = intercept[Exception] {
-      Similarity.nearDupCosine(bad, "vec_id", "embedding", 0.5, useLsh = true).collect()
+      Similarity.nearDupCosine(bad, "vec_id", "embedding", 0.5).collect()
     }
     assert(e.getMessage.contains("dim mismatch") ||
       Option(e.getCause).exists(_.getMessage.contains("dim mismatch")))

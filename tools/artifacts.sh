@@ -69,7 +69,7 @@ if [ "$CHAIN" != timed ]; then
   PREV=$(ls PLANSUMMARY_r*.json | sed -n 's/^PLANSUMMARY_r\([0-9]*\)\.json$/\1/p' \
     | awk -v r="$((10#$R))" '$1 + 0 < r' | sort -n | tail -1)
   if [ -n "$PREV" ]; then
-    python3 tools/plan_diff.py "PLANSUMMARY_r$PREV.json" "PLANSUMMARY_r$R.json"
+    python3 tools/plan_diff.py "PLANSUMMARY_r$PREV.json" "PLANSUMMARY_r$R.json" || true
   fi
   step NoBroadcastVerify
   tools/runjvm.sh graft.tools.NoBroadcastVerify $SF001 "$WORK/nobc" 2>&1 | tail -1

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Diff two PlanSummary artifacts: prints every query whose plan-shape
-counters differ (or that exists in only one file). Empty output = the
-two snapshots planned every common query identically.
+counters differ (or that exists in only one file). Exits 0 when the two
+snapshots planned every query identically, 1 when any query differs.
 
 Usage: python3 tools/plan_diff.py <old.json> <new.json>
 """
@@ -30,7 +30,7 @@ def main(old_path, new_path):
             n_diff += 1
     print(f"-- {n_diff} differing / {len(set(old_q) & set(new_q))} common "
           f"({len(old_q)} old, {len(new_q)} new)")
-    return 0
+    return 1 if n_diff else 0
 
 
 if __name__ == "__main__":
